@@ -3,6 +3,7 @@ package graft.index
 import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
 import graft.corpus.SourceFile
 import graft.index.DocIds.Doc
 import graft.search.{BM25, Wand}
@@ -641,7 +642,30 @@ class InvertedIndex(@transient val spark: SparkSession, val dir: String) extends
         spark.sparkContext.hadoopConfiguration)))
   }
 
-  def termStats: DataFrame = spark.read.parquet(s"$dir/termstats")
+  /** The global (term, df, ub) table. The resolved frame is cached on
+    * the handle like `postingsByEpoch`: `spark.read.parquet` lists the
+    * directory and infers the schema in a Spark job of its own, which
+    * doubled the cost of every termInfo memo miss. Unlike the posting
+    * roots, termstats is rewritten in place (by every append and by a
+    * resumed build), so the cache is keyed by the stage's part-file
+    * names: a rewrite re-resolves the frame instead of leaving it to
+    * read deleted files.
+    */
+  def termStats: DataFrame = synchronized {
+    val path = Paths.get(dir, "termstats")
+    val parts =
+      if (!Files.isDirectory(path)) Nil
+      else {
+        val ls = Files.list(path)
+        try ls.iterator().asScala.map(_.getFileName.toString)
+          .filter(_.startsWith("part-")).toSeq.sorted
+        finally ls.close()
+      }
+    if (termStatsAt == null || termStatsAt._1 != parts)
+      termStatsAt = (parts, spark.read.parquet(path.toString))
+    termStatsAt._2
+  }
+  @transient private var termStatsAt: (Seq[String], DataFrame) = _
 
   def docs: DataFrame = spark.read.parquet(epochPaths("docs"): _*)
 
@@ -664,15 +688,21 @@ class InvertedIndex(@transient val spark: SparkSession, val dir: String) extends
     val distinct = qTerms.distinct
     val missing = distinct.filterNot(termCache.contains)
     if (missing.nonEmpty) {
-      val n = nDocs.toDouble
-      val found = termStats.filter($"term".isin(missing: _*))
-        .collect()
-        .map(r => r.getString(0) ->
-          (BM25.idf(n, r.getLong(1).toDouble), r.getDouble(2)))
-        .toMap
+      val found = collectTermInfo(termStats.filter($"term".isin(missing: _*)))
       missing.foreach(t => termCache.put(t, found.get(t)))
     }
     distinct.flatMap(t => termCache(t).map(t -> _)).toMap
+  }
+
+  /** Collect a (filtered) [[termStats]] frame as term → (idf, ub) under
+    * this handle's nDocs — the one place the stat formula lives, shared
+    * by the termInfo memo and the serving replicas' load-time collect.
+    */
+  def collectTermInfo(stats: DataFrame): Map[String, (Double, Double)] = {
+    val n = nDocs.toDouble
+    stats.select($"term", $"df", $"ub").collect()
+      .map(r => r.getString(0) -> (BM25.idf(n, r.getLong(1).toDouble), r.getDouble(2)))
+      .toMap
   }
 
   /** Global per-term idf map for a query. */

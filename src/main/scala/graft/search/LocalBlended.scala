@@ -12,18 +12,20 @@ import graft.index.DecodedCursor
   * wrapped LocalSearcher) plus the SAME range's λ slice — per-doc λ for
   * shard s covers docIds [s·docsPerShard, (s+1)·docsPerShard), so the
   * λ slice is exactly the doc-shard layout the posting slice already
-  * follows. idf/ub statistics stay global but are fetched LAZILY per
-  * query through the index's termInfo memo (a replica needs only its
-  * working set of query terms, never the full termstats table — which
-  * is not collectable at 10¹²-doc scale), so replica results still
-  * merge exactly (same argument as LocalSearcher.mergeTopK).
+  * follows. idf/ub statistics stay global: the wrapped searcher loads
+  * them with its postings for every term its slice holds, bounded by
+  * the same `rowBudget` (see LocalSearcher.fromIndex), so replica
+  * results still merge exactly (same argument as
+  * LocalSearcher.mergeTopK). A full-range replica serves with no Spark
+  * job; a slice replica asks the index's termInfo memo only for query
+  * terms outside its slice.
   *
-  * Query path = the distributed LambdaIndex.blendedTopK semantics
-  * verbatim: slack = (1−α)/α·ubNorm capped at the query's max
-  * achievable BM25 (Σ idf·ub), per-shard Wand.candidatesWithSlack band,
-  * λ looked up per candidate (0.0 when absent — same as the
-  * distributed left-join + fill), blend, merge by (score DESC, docId
-  * ASC). Rank-identity to the distributed path is asserted in
+  * Query path = the distributed LambdaIndex.blendedTopK semantics: per
+  * shard, the blended-WAND kernel [[Wand.blendedTopK]] prunes directly
+  * on the blended threshold α·BM25/ubNorm + (1−α)·proximity, with λ
+  * looked up per surviving doc (0.0 when absent — same as the
+  * distributed left-join + fill); shard top-ks merge by (score DESC,
+  * docId ASC). Rank-identity to the distributed path is asserted in
   * LambdaPipelineSpec.
   */
 final class LocalBlended(
@@ -36,19 +38,19 @@ final class LocalBlended(
     val toks = tokenize(qText)
     val counts = toks.toSeq.groupBy(identity).map { case (t, xs) => t -> xs.size }
     val lq = queryLambda(counts)
-    // terms filter + ubNorm/tightUb come from GLOBAL stats (the index's
-    // termInfo covers the whole index) — NOT from this replica's slice-
-    // local byTerm: a term absent from this shard range must still
-    // contribute to the normalizer, or replicas score on different
-    // scales and the fan-out merge stops being exact
+    // terms filter + ubNorm come from GLOBAL stats (termInfoFn covers
+    // the whole index) — NOT from this replica's slice-local byTerm: a
+    // term absent from this shard range must still contribute to the
+    // normalizer, or replicas score on different scales and the fan-out
+    // merge stops being exact
     val info = searcher.termInfoFn(toks.distinct.toSeq)
     topKCanonical(toks.distinct.filter(info.contains).sorted.toSeq, lq, info, k, alpha)
   }
 
   /** Batched serving: the canonical-set dedup of the distributed
     * blendedTopKBatch applied driver-side — tokenize, λq, global-stat
-    * fetch (ONE termInfo call for the whole batch), and the banded WAND
-    * + blend run once per DISTINCT (indexed term set, λq), then fan
+    * lookup (ONE termInfoFn call for the whole batch), and the blended
+    * WAND run once per DISTINCT (indexed term set, λq), then fan
     * back out to every query id. ≡ sequential topK calls (asserted in
     * LambdaPipelineSpec); throughput follows distinct canonical sets,
     * not batch size.
@@ -133,19 +135,18 @@ final class LocalBlended(
 
 object LocalBlended {
 
-  /** Collect a replica: posting lists + λ slice for [shardLo, shardHi]
-    * (two pushed-filter scans) and the λ-index query-side closure
-    * (vocab + CSR already live on the driver in LambdaIndex); global
-    * (idf, ub) term stats are NOT collected — the wrapped searcher's
-    * termInfoFn fetches each query's working set lazily. docsPerShard
-    * comes from the index meta so the λ slice matches the posting slice
-    * exactly.
+  /** Collect a replica: posting lists, the global (idf, ub) of every
+    * term they hold, and the λ slice for [shardLo, shardHi] (pushed-
+    * filter scans), plus the λ-index query-side closure (vocab + CSR
+    * already live on the driver in LambdaIndex). docsPerShard comes from
+    * the index meta so the λ slice matches the posting slice exactly.
     *
     * SCALE CONTRACT: replicas are slice-scoped — the full-range default
     * collects the whole posting set AND the whole λ table, fine only for
-    * tests/small corpora. Both collects are budget-guarded (the posting
-    * side inside LocalSearcher.fromIndex, the λ side here) and
-    * `onOversize` fires before an uncollectable slice is attempted.
+    * tests/small corpora. The collects are budget-guarded (the posting
+    * side and its term stats inside LocalSearcher.fromIndex, the λ side
+    * here) and `onOversize` fires before an uncollectable slice is
+    * attempted.
     */
   def fromIndexes(index: graft.index.InvertedIndex,
       lam: graft.lambda.LambdaIndex,

@@ -11,11 +11,11 @@ import graft.index.InvertedIndex
   * remains the scale path; this is the low-latency serving tier a search
   * cluster would run per replica over its shard range. Driver-side only.
   *
-  * Term statistics are NOT collected up front: at 10¹²-doc scale the
-  * full termstats table is not collectable, but a serving process's
-  * working set of query terms is — `termInfoFn` lazily fetches (idf,
-  * ub) per query through InvertedIndex.termInfo's memo (one tiny
-  * pushed-filter scan per cold term set, then pure in-memory).
+  * Term statistics load with the replica: (idf, ub) for every term of
+  * its shard slice, collected once at [[LocalSearcher.fromIndex]] and
+  * bounded by the same `rowBudget` as the postings (at most one stats
+  * row per held list). `termInfoFn` answers held terms from that map,
+  * so a query never starts a Spark job for its stats.
   */
 final class LocalSearcher(
     val byTerm: Map[String, Array[graft.index.DecodedList]],
@@ -37,7 +37,7 @@ final class LocalSearcher(
     evalCanonical(terms, idfMap, k)
   }
 
-  /** Batched serving: one termInfo fetch for the whole batch, then one
+  /** Batched serving: one termInfoFn lookup for the whole batch, then one
     * WAND evaluation per DISTINCT canonical term set, run in parallel
     * across the replica's cores (each evaluation reads only immutable
     * decoded lists and builds its own cursors). ≡ sequential topK calls
@@ -66,9 +66,9 @@ final class LocalSearcher(
     // groupBy(_.shard) + sortBy(_._1) + per-shard sortBy(_.term) (the
     // per-canonical Map/Seq churn was measured serving warm-up cost)
     val arrays = terms.map(byTerm(_)).toArray
-    // a term can be decoded in this replica yet missing from the lazily
-    // fetched termstats (stale/partially rebuilt stats): degrade to the
-    // df=0 idf instead of throwing — same graceful contract the
+    // a term can be decoded in this replica yet missing from the
+    // termstats loaded with it (stale/partially rebuilt stats): degrade
+    // to the df=0 idf instead of throwing — same graceful contract the
     // pre-memo idf() helper had
     val idfs = terms.map(t => idfMap.getOrElse(t, BM25.idf(nDocs.toDouble, 0.0))).toArray
     val pos = new Array[Int](arrays.length)
@@ -121,16 +121,23 @@ object LocalSearcher {
     * The shard predicate pushes to the postings parquet scan (shard is a
     * sorted column → row-group pruning), so a replica reads ONLY its
     * slice from storage. idf statistics (termstats, nDocs, avgdl) stay
-    * GLOBAL regardless of the slice — fetched lazily per query via the
-    * index's termInfo memo, never as a full termstats collect — so
-    * replica scores are identical to the full searcher's and a fan-out
-    * tier can merge replica top-ks by (score DESC, docId ASC) exactly.
+    * GLOBAL regardless of the slice, so replica scores are identical to
+    * the full searcher's and a fan-out tier can merge replica top-ks by
+    * (score DESC, docId ASC) exactly. The (idf, ub) of every term the
+    * slice holds loads here, in one more read of termstats: the whole
+    * table when the range covers every shard, else a left-semi join
+    * against the slice's terms. A full-range replica then treats any
+    * other term as absent from the index; a slice replica asks the
+    * index's termInfo memo for terms it does not hold (the blended
+    * normalizer needs their global stats — see LocalBlended.topK).
     *
     * SCALE CONTRACT: replicas are slice-scoped. The full-range default
     * silently collects the ENTIRE posting set — fine for tests, a
     * scale-killer on a big index — so the slice's posting count is
     * checked (one tiny pushed-filter aggregate) against `rowBudget`
-    * BEFORE the collect and `onOversize` fires when it exceeds it.
+    * BEFORE the collect and `onOversize` fires when it exceeds it. The
+    * stats map holds at most one row per held list, so the same check
+    * bounds it.
     */
   def fromIndex(index: InvertedIndex, shardLo: Int = 0,
       shardHi: Int = Int.MaxValue,
@@ -157,7 +164,17 @@ object LocalSearcher {
         pl.shard.toLong * lh.docsPerShard)
     }
     val byTerm = lists.groupBy(_.term).map { case (t, ls) => t -> ls.sortBy(_.shard) }
-    val searcher = new LocalSearcher(byTerm, index.termInfo, index.nDocs, index.avgdl, index.bm25)
+    val fullRange = shardLo <= 0 && shardHi >= (index.nDocs - 1) / index.docsPerShard
+    val held = index.collectTermInfo(
+      if (fullRange) index.termStats
+      else index.termStats.join(slice.select("term"), Seq("term"), "left_semi"))
+    val termInfoFn: Seq[String] => Map[String, (Double, Double)] = { ts =>
+      // a full-range replica holds every indexed term: any other is absent
+      val (mine, others) = ts.distinct.partition(t => fullRange || byTerm.contains(t))
+      mine.flatMap(t => held.get(t).map(t -> _)).toMap ++
+        (if (others.isEmpty) Map.empty else index.termInfo(others))
+    }
+    val searcher = new LocalSearcher(byTerm, termInfoFn, index.nDocs, index.avgdl, index.bm25)
     warmKernel(searcher)
     searcher
   }
@@ -167,8 +184,8 @@ object LocalSearcher {
     * serving practice; measured on this box the cold kernel serves
     * ~7.5k q/s and climbs to ~12k as C2 finishes — a replica that skips
     * this serves its first seconds of traffic at half speed). Results
-    * are discarded; the only side effects are compiled code and the
-    * warm terms' (idf, ub) entries in the index's termInfo memo.
+    * are discarded; the only side effect is compiled code (the warm
+    * terms are held terms, whose stats loaded with the replica).
     */
   private def warmKernel(s: LocalSearcher): Unit = {
     val warmTerms = s.byTerm.keysIterator.take(32).toVector

@@ -125,6 +125,29 @@ class IndexSpec extends AnyFunSuite {
       val whole = full.topK(q, 10).map(h => (h.docId, h.score)).toSeq
       assert(merged == whole, s"q=$q: $merged vs $whole")
     }
+    // stale stats: a term the slice replica decodes but that the termstats
+    // table lacks takes the df = 0 idf instead of throwing
+    val gone = lo.byTerm.keys.toSeq.sorted.find(t => !hi.byTerm.contains(t)).get
+    val staleDir = s"$tmp/stale-stats"
+    copyTree(Paths.get(s"$tmp/idx"), Paths.get(staleDir))
+    spark.read.parquet(s"$tmp/idx/termstats").filter(col("term") =!= gone)
+      .write.mode("overwrite").parquet(s"$staleDir/termstats")
+    val staleIx = new graft.index.InvertedIndex(spark, staleDir)
+    val stale = graft.search.LocalSearcher.fromIndex(staleIx, shardLo = 0, shardHi = 2)
+    assert(stale.byTerm.contains(gone) && stale.termInfoFn(Seq(gone)).isEmpty)
+    val idf0 = BM25.idf(staleIx.nDocs.toDouble, 0.0)
+    val idf = lo.termInfoFn(Seq(gone))(gone)._1
+    val got = stale.topK(Seq(gone), 10).map(h => (h.docId, h.score)).toSeq
+    val want = lo.topK(Seq(gone), 10).map(h => (h.docId, h.score * idf0 / idf)).toSeq
+    assert(got.nonEmpty && got.map(_._1) == want.map(_._1), s"$got vs $want")
+    got.zip(want).foreach { case ((_, a), (_, b)) => assert(math.abs(a - b) < 1e-9) }
+    assert(stale.topK(Seq(gone, "get"), 10).nonEmpty)
+  }
+
+  private def copyTree(from: java.nio.file.Path, to: java.nio.file.Path): Unit = {
+    val walk = Files.walk(from)
+    try walk.forEach(p => Files.copy(p, to.resolve(from.relativize(p))))
+    finally walk.close()
   }
 
   test("append epoch ≡ full rebuild: identical (path, score) ranking; bounds stay exact") {
@@ -319,6 +342,9 @@ class IndexSpec extends AnyFunSuite {
     // docs stage untouched (lineage identical), and queries still work
     assert(Files.readString(Paths.get(s"$tmp/idx/docs/_lineage.json")) == docsLineage)
     assert(idx2.wandTopK(Seq("get"), 3).count() == 3)
+    // the rewrite replaced termstats' part files: a handle opened before
+    // it re-resolves its cached frame instead of reading deleted files
+    assert(index.termStats.count() == idx2.termStats.count())
   }
 
   test("bucketed merge: identical results; interrupted merge resumes mid-merge") {
@@ -341,6 +367,9 @@ class IndexSpec extends AnyFunSuite {
     // untouched buckets kept their lineage byte-for-byte
     assert(Files.readString(Paths.get(s"$t3/idx/postings/bucket=1/_lineage.json")) == b1Lineage)
     assert(idx2.wandTopK(Seq("get"), 3).count() == 3)
+    // the rewrite replaced termstats' part files: a handle opened before
+    // it re-resolves its cached frame instead of reading deleted files
+    assert(index.termStats.count() == idx2.termStats.count())
   }
 
   test("term-bucketed postings layout: identical results; single-term queries prune partitions") {

@@ -213,6 +213,42 @@ class LambdaPipelineSpec extends AnyFunSuite {
     }
   }
 
+  test("full-range replicas serve with zero Spark jobs, results ≡ the distributed paths") {
+    // a fresh handle: its termInfo memo is empty, so a per-query stat
+    // lookup on it would start a job. The queries use needle terms no
+    // other query in this suite uses, plus a term absent from the index.
+    val ix = new graft.index.InvertedIndex(spark, s"$tmp/idx")
+    val lb = graft.search.LocalBlended.fromIndexes(ix, li)
+    val ls = lb.searcher
+    def needle(id: Long) = graft.tokenize.CodeTokenizer.codeTokens(CodeCorpus.needleToken(42L, id))(1)
+    val texts = Seq(needle(11L), s"${needle(201L)} get data", "zzabsentzz",
+      s"zzabsentzz ${needle(333L)} value")
+    val queries = texts.map(t => graft.tokenize.CodeTokenizer.codeTokens(t).distinct.toSeq)
+    assert(!ix.termInfo(Seq("zzabsentzz")).contains("zzabsentzz"), "precondition: term is absent")
+    val ((bm25, bm25Batch, blended, blendedBatch), jobs) = JobCounter.jobsIn(spark) {
+      (queries.map(ls.topK(_, 10)), ls.topKBatch(queries.zipWithIndex.map(_.swap), 10).toMap,
+        texts.map(lb.topK(_, 10, 0.9)), lb.topKBatch(texts.zipWithIndex.map(_.swap), 10, 0.9).toMap)
+    }
+    assert(jobs == 0, s"replica queries started $jobs Spark job(s)")
+    def pairs(hs: Array[graft.search.Wand.Hit]) = hs.map(h => (h.docId, h.score)).toSeq
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+    for ((q, i) <- queries.zipWithIndex) {
+      val want = rows(ix.wandTopK(q, 10))
+      assert(pairs(bm25(i)) == want, s"q=$q topK vs wandTopK")
+      assert(pairs(bm25Batch(i)) == want, s"q=$q topKBatch vs wandTopK")
+      assert(pairs(bm25(i)) == rows(ix.exactTopK(q, 10)), s"q=$q topK vs exactTopK")
+    }
+    assert(bm25(2).isEmpty && blended(2).isEmpty, "absent term must match nothing")
+    for ((text, i) <- texts.zipWithIndex) {
+      val want = rows(li.blendedTopK(ix, text, 10, alpha = 0.9))
+      for ((got, path) <- Seq(pairs(blended(i)) -> "topK", pairs(blendedBatch(i)) -> "topKBatch")) {
+        assert(got.map(_._1) == want.map(_._1), s"text=$text blended $path: $got vs $want")
+        got.zip(want).foreach { case ((_, a), (_, b)) => assert(math.abs(a - b) < 1e-9) }
+      }
+    }
+  }
+
   test("zero-in-vocab docs: λ fill-in is 0 and blend rank ≡ pure BM25 (pinned)") {
     import spark.implicits._
     val t = Files.createTempDirectory("graft-lp-oov").toString
