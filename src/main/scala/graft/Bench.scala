@@ -446,8 +446,8 @@ object Bench {
       (System.nanoTime() - t) / 1e9
     }.min
     // λτ pipeline + BATCHED blended search at α=0.9 (the reference's own
-    // blended bench config, base_index_bench α=0.9): per-set slack bands
-    // + one λ join for the whole batch
+    // blended bench config, base_index_bench α=0.9): the blended kernel
+    // per (set, shard), λ read in-task from the side arrays
     val lamDir = s"$dirBase/lam_cpu$cpus"
     Stage.deleteRecursive(java.nio.file.Paths.get(lamDir))
     val tl = System.nanoTime()
@@ -479,7 +479,7 @@ object Bench {
       s"serving_blended_$name" -> times(reps / 2)
     }.toMap
     // blended serving BATCH: one topKBatch call answers N queries with
-    // per-canonical dedup (tokenize/λ/band once per distinct set) — the
+    // per-canonical dedup (tokenize/λ/kernel once per distinct set) — the
     // reference's batch headline shape served from the in-memory tier
     val sbN = 512
     val sbQueries = blTexts(sbN)

@@ -370,8 +370,10 @@ object IndexBuilder {
     * LIVE avgdl (per-list maxPartial lifted by the safe boundFactor when
     * the corpus avgdl grew past the list's encAvgdl). Σ_t idf·ub over a
     * query's terms is a tight a-priori ceiling on its best possible BM25
-    * score — the bound that decides whether a blended-search slack can
-    * prune at all (LambdaIndex.blendedTopK).
+    * score. No query path reads `ub` today; it stays in the index format
+    * because the (idf, ub) pair is the type of `termInfo` and of the
+    * replicas' `termInfoFn` (which the benchmark compiles against), and
+    * because it is the input a seeded per-set WAND threshold needs.
     */
   private def writeTermStats(spark: SparkSession, paths: Seq[String],
       avgdlNow: Double, out: String): Unit = {
@@ -709,88 +711,86 @@ class InvertedIndex(@transient val spark: SparkSession, val dir: String) extends
   def idfFor(qTerms: Seq[String]): Map[String, Double] =
     termInfo(qTerms).map { case (t, (i, _)) => t -> i }
 
-  /** Distributed block-max WAND top-k: per doc-shard tasks run exact
-    * local WAND; TakeOrderedAndProject merges shard top-ks (per-partition
-    * heaps + driver merge — same shape as the reference's per-thread heap
-    * merge, /root/reference/src/core.rs:818-888).
+  /** Distributed block-max WAND top-k: a one-set [[shardTopK]] program;
+    * TakeOrderedAndProject merges the shard top-ks (per-partition heaps +
+    * driver merge — same shape as the reference's per-thread heap merge,
+    * reference src/core.rs:818-888).
     */
-  def wandTopK(qTerms: Seq[String], k: Int, roundTo: Int = -1): DataFrame = {
-    val terms = qTerms.distinct
-    val idf = idfFor(terms)
-    val p = bm25
-    val ad = avgdl
-    val lh = lensHandle
-    val hits = postingsFor(terms)
-      .groupByKey(_.shard)
-      .flatMapGroups { (shard, it) =>
-        val lens = lh.forShard(shard)
-        val base = shard.toLong * lh.docsPerShard
-        Wand.topKLists(it.toSeq, idf, p, ad, k, lens, base).iterator
-          .map(h => (h.docId, h.score))
-      }
-      .toDF("doc_id", "score")
-    val top = hits.orderBy($"score".desc, $"doc_id".asc).limit(k)
-    if (roundTo >= 0) top.withColumn("score", round($"score", roundTo)) else top
-  }
+  def wandTopK(qTerms: Seq[String], k: Int, roundTo: Int = -1): DataFrame =
+    mergeOne(shardTopK(Seq(qTerms.distinct.sorted), k, None), k, roundTo)
 
   /** Batched top-k: run MANY queries in ONE Spark job. Per doc-shard
-    * task, every query's block-max WAND runs against that shard's lists;
-    * a single per-query window selects the global top-k. This amortizes
-    * job-scheduling latency across the batch — the Spark analog of the
-    * reference's batch benches (/root/reference/benches/
+    * task, every query's block-max WAND runs against that shard's lists
+    * ([[shardTopK]]); [[rankPerQuery]] selects each query's global top-k.
+    * This amortizes job-scheduling latency across the batch — the Spark
+    * analog of the reference's batch benches (reference benches/
     * index_compute_bench.rs:180-320) and the path that makes cluster QPS
     * comparable to a single-process engine.
     *
-    * Returns (qid, doc_id, score) with per-query rank ≤ k, ordered
+    * Returns (qid, doc_id, score, rank) with per-query rank ≤ k, ordered
     * (score DESC, doc_id ASC) within qid.
     */
   def wandTopKBatch(queries: Seq[(Int, Seq[String])], k: Int): DataFrame = {
-    val allTerms = queries.flatMap(_._2).distinct
-    val idf = idfFor(allTerms)
+    val idf = idfFor(queries.flatMap(_._2).distinct)
     // Canonicalize and DEDUP term sets before execution: real query
     // batches repeat (hot queries, retries, fan-in), and per-shard WAND
     // cost scales with DISTINCT sets, not batch size. Sorting happens
     // once here, not per (query, shard) task iteration.
-    val qNorm: Seq[(Int, Seq[String])] =
-      queries.map { case (qid, ts) => (qid, ts.distinct.filter(idf.contains).sorted) }
-    val setOf: Map[Seq[String], Int] = qNorm.map(_._2).distinct.zipWithIndex.toMap
-    val setList: Seq[(Int, Seq[String])] = setOf.toSeq.map(_.swap).sortBy(_._1)
+    val qNorm = queries.map { case (qid, ts) => (qid, ts.distinct.filter(idf.contains).sorted) }
+    val sets = qNorm.map(_._2).distinct
+    val setOf = sets.zipWithIndex.toMap
+    rankPerQuery(shardTopK(sets, k, None), qNorm.map { case (qid, ts) => (qid, setOf(ts)) }, k)
+  }
+
+  /** The one per-shard query program behind every distributed top-k
+    * (BM25 and blended, single and batch). For each doc-shard it decodes
+    * every posting list of the queried terms ONCE, keeps one
+    * [[DecodedCursor]] per list, and runs the kernel for each set with a
+    * term in that shard — `Wand.topK`, or `Wand.blendedTopK` with the
+    * set's (λq, ubNorm) and the shard's λ window when `blend` is given.
+    * `sets` are canonical (distinct, sorted) term sets; a set's id is its
+    * position. Returns (set_id, doc_id, score): each (set, shard) top-k
+    * with exact scores. Every shard's k-th best ≤ the global k-th best,
+    * so the union holds each set's global top-k and a per-set top-k
+    * merge downstream is exact.
+    *
+    * ONE broadcast carries the whole program (sets, the inverted
+    * term → sets map, idf, blend): closure-captured sets were
+    * re-deserialized per task (~1 MB × shuffle partitions), and the
+    * inverted map lets each shard task touch ONLY the sets with ≥1 term
+    * present in that shard (a batch dominated by single-shard rare terms
+    * otherwise iterates every set in every shard).
+    */
+  private[graft] def shardTopK(sets: Seq[Seq[String]], k: Int,
+      blend: Option[Blend]): DataFrame = {
+    val allTerms = sets.flatten.distinct
+    val idf = idfFor(allTerms)
     val p = bm25
     val ad = avgdl
     val lh = lensHandle
-    // ONE broadcast of the whole query program (term sets + the inverted
-    // term→sets map + idf): the former closure-captured setList/idf were
-    // re-deserialized per task (~1 MB × shuffle partitions); the
-    // inverted map lets each shard task touch ONLY the sets with ≥1
-    // term present in that shard (a batch dominated by single-shard
-    // rare terms otherwise iterates every set in every shard).
     val bProg = spark.sparkContext.broadcast(
-      (setList.map(_._2.toArray).toArray, invertSets(setList), idf))
-    val hits = postingsFor(allTerms)
+      (sets.map(_.toArray).toArray, invertSets(sets), idf, blend))
+    postingsFor(allTerms)
       .groupByKey(_.shard)
       .flatMapGroups { (shard, it) =>
-        // decode each posting list ONCE; all sets share the decoded
-        // arrays via O(1) reset cursors — decode bandwidth no longer
-        // scales with batch size. Lists group into ARRAYS per term:
-        // after an epoch append whose base size is not a multiple of
-        // docsPerShard, the boundary doc-shard holds TWO lists for the
-        // same (term, shard) — one base, one epoch — and a .toMap here
-        // would silently drop one, never scoring its docs.
-        val byTerm: Map[String, Array[DecodedList]] = decodeByTerm(it, p, ad, lh, shard)
-        val (sTerms, sOf, idfB) = bProg.value
-        // one cursor per decoded list per task, reset per query
+        val (sTerms, sOf, idfB, blendB) = bProg.value
+        // one cursor per decoded list per task, reset per set
         val pool = new java.util.HashMap[String, Array[DecodedCursor]]()
-        byTerm.foreach { case (t, dls) =>
-          pool.put(t, dls.map(d => new DecodedCursor(d, idfB(t))))
-        }
         val present = new java.util.BitSet(sTerms.length)
-        byTerm.keysIterator.foreach { t =>
-          sOf.get(t).foreach { a =>
-            var i = 0; while (i < a.length) { present.set(a(i)); i += 1 }
-          }
+        decodeByTerm(it, p, ad, lh, shard).foreach { case (t, dls) =>
+          pool.put(t, dls.map(d => new DecodedCursor(d, idfB(t))))
+          sOf.get(t).foreach(_.foreach(present.set))
         }
         val ws = new Wand.Workspace
         val cbuf = new scala.collection.mutable.ArrayBuffer[Wand.Cursor]()
+        val kernel: Int => Array[Wand.Hit] = blendB match {
+          case Some(b) =>
+            val lam = b.lam.forShard(shard)
+            val base = shard.toLong * lh.docsPerShard
+            val lambdaOf: Long => Double = d => lam((d - base).toInt)
+            sid => Wand.blendedTopK(cbuf, k, b.alpha, b.ubNorm(sid), b.lq(sid), lambdaOf, ws)
+          case None => _ => Wand.topK(cbuf, k, ws)
+        }
         Iterator.iterate(present.nextSetBit(0))(s => present.nextSetBit(s + 1))
           .takeWhile(_ >= 0)
           .flatMap { sid =>
@@ -805,16 +805,29 @@ class InvertedIndex(@transient val spark: SparkSession, val dir: String) extends
               }
               i += 1
             }
-            Wand.topK(cbuf, k, ws).iterator.map(h => (sid, h.docId, h.score))
+            kernel(sid).iterator.map(h => (sid, h.docId, h.score))
           }
       }
       .toDF("set_id", "doc_id", "score")
-    // per-set global top-k via the map-side-combining TopKAgg heap
-    // aggregator (shared with blendedTopKBatch): a Window + row_number
-    // here full-sort-shuffled the ~sets×shards×k hit rows (10⁷ at the
-    // bench batch size) — the measured non-scaling stage of the batch
-    // QPS path; partial heaps ship ≤ tasks × sets × k rows and nothing
-    // is ever globally sorted
+  }
+
+  /** The global top-k of a one-set [[shardTopK]] program, (doc_id, score)
+    * ordered (score DESC, doc_id ASC); scores rounded when roundTo ≥ 0.
+    */
+  private[graft] def mergeOne(hits: DataFrame, k: Int, roundTo: Int): DataFrame = {
+    val top = hits.select($"doc_id", $"score").orderBy($"score".desc, $"doc_id".asc).limit(k)
+    if (roundTo >= 0) top.withColumn("score", round($"score", roundTo)) else top
+  }
+
+  /** Per-set global top-k of a [[shardTopK]] program, fanned back out to
+    * every qid of `qSet` (qid → set id): (qid, doc_id, score, rank). The
+    * map-side-combining TopKAgg heap aggregator replaces a Window +
+    * row_number, which full-sort-shuffled the ~sets×shards×k hit rows
+    * (10⁷ at the bench batch size) — the measured non-scaling stage of
+    * the batch QPS path; partial heaps ship ≤ tasks × sets × k rows and
+    * nothing is ever globally sorted.
+    */
+  private[graft] def rankPerQuery(hits: DataFrame, qSet: Seq[(Int, Int)], k: Int): DataFrame = {
     val agg = new graft.search.TopKAgg(k)
     val setTop = hits
       .as[(Int, Long, Double)]
@@ -825,27 +838,27 @@ class InvertedIndex(@transient val spark: SparkSession, val dir: String) extends
         top.iterator.zipWithIndex.map { case (h, i) => (sid, h.docId, h.score, i + 1) }
       }
       .toDF("set_id", "doc_id", "score", "rank")
-    // fan the per-set top-k back out to every qid that asked for it
-    val qMap = qNorm.map { case (qid, ts) => (qid, setOf(ts)) }.toDF("qid", "set_id")
-    setTop.join(broadcast(qMap), "set_id")
+    setTop.join(broadcast(qSet.toDF("qid", "set_id")), "set_id")
       .select($"qid", $"doc_id", $"score", $"rank")
   }
 
-  /** term → ids of the query sets containing it (the batch paths'
-    * per-shard present-set inversion).
+  /** term → positions of the sets containing it (the per-shard
+    * present-set inversion).
     */
-  private def invertSets(setList: Seq[(Int, Seq[String])]): Map[String, Array[Int]] = {
+  private def invertSets(sets: Seq[Seq[String]]): Map[String, Array[Int]] = {
     val m = scala.collection.mutable.HashMap[String, scala.collection.mutable.ArrayBuffer[Int]]()
-    setList.foreach { case (sid, ts) =>
+    sets.zipWithIndex.foreach { case (ts, sid) =>
       ts.foreach(t => m.getOrElseUpdate(t, new scala.collection.mutable.ArrayBuffer[Int]()) += sid)
     }
     m.iterator.map { case (t, b) => t -> b.toArray }.toMap
   }
 
-  /** Decode one shard's posting lists once, grouped by term (one ARRAY
-    * per term — same-(term, shard) duplicates from epoch appends each
-    * keep their list; docId ranges are disjoint so one cursor per list
-    * is exact).
+  /** Decode one shard's posting lists once, grouped into one ARRAY per
+    * term: after an epoch append whose base size is not a multiple of
+    * docsPerShard, the boundary doc-shard holds TWO lists for the same
+    * (term, shard) — one base, one epoch — and a per-term single value
+    * would silently drop one, never scoring its docs. docId ranges are
+    * disjoint, so one cursor per list is exact.
     */
   private def decodeByTerm(it: Iterator[PostingList], p: BM25.Params,
       ad: Double, lh: LensHandle, shard: Int): Map[String, Array[DecodedList]] = {
@@ -854,156 +867,6 @@ class InvertedIndex(@transient val spark: SparkSession, val dir: String) extends
     it.toSeq.groupBy(_.term).map { case (t, pls) =>
       t -> pls.map(pl => DecodedList.from(pl, p, ad, lens, base)).toArray
     }
-  }
-
-  /** Batched bound-safe candidate bands (the blended-batch analog of
-    * wandTopKBatch): for every canonical (set_id, terms, slack) the
-    * per-doc-shard WAND-with-slack band runs over decode-once lists.
-    * Returns (set_id, doc_id, bm25) with exact raw scores. Per-shard
-    * band size is bounded by docsPerShard, so the output stays a
-    * DISTRIBUTED dataset of ≤ nDocs rows — nothing is collected.
-    */
-  def candidatesBatch(sets: Seq[(Int, Seq[String], Double)], k: Int): DataFrame = {
-    val allTerms = sets.flatMap(_._2).distinct
-    val idf = idfFor(allTerms)
-    val p = bm25
-    val ad = avgdl
-    val lh = lensHandle
-    // same decode-once + broadcast-program + present-set shape as
-    // wandTopKBatch; set ids need not be contiguous here (public API),
-    // so the inversion maps terms to POSITIONS in the sets array
-    val posList = sets.zipWithIndex.map { case ((_, ts, _), pos) => (pos, ts) }
-    val bProg = spark.sparkContext.broadcast(
-      (sets.toArray, invertSets(posList), idf))
-    postingsFor(allTerms)
-      .groupByKey(_.shard)
-      .flatMapGroups { (shard, it) =>
-        val byTerm = decodeByTerm(it, p, ad, lh, shard)
-        val (setsArr, posOf, idfB) = bProg.value
-        val pool = new java.util.HashMap[String, Array[DecodedCursor]]()
-        byTerm.foreach { case (t, dls) =>
-          pool.put(t, dls.map(d => new DecodedCursor(d, idfB(t))))
-        }
-        val present = new java.util.BitSet(setsArr.length)
-        byTerm.keysIterator.foreach { t =>
-          posOf.get(t).foreach { a =>
-            var i = 0; while (i < a.length) { present.set(a(i)); i += 1 }
-          }
-        }
-        val ws = new Wand.Workspace
-        val cbuf = new scala.collection.mutable.ArrayBuffer[Wand.Cursor]()
-        Iterator.iterate(present.nextSetBit(0))(s => present.nextSetBit(s + 1))
-          .takeWhile(_ >= 0)
-          .flatMap { pos =>
-            val (sid, ts, slack) = setsArr(pos)
-            cbuf.clear()
-            var i = 0
-            while (i < ts.length) {
-              val cs = pool.get(ts(i))
-              if (cs != null) {
-                var j = 0
-                while (j < cs.length) { cs(j).reset(); cbuf += cs(j); j += 1 }
-              }
-              i += 1
-            }
-            Wand.candidatesWithSlack(cbuf, k, slack, ws).iterator
-              .map(h => (sid, h.docId, h.score))
-          }
-      }
-      .toDF("set_id", "doc_id", "bm25")
-  }
-
-  /** Batched BLENDED top-k bands: for every canonical
-    * (set_id, terms, λq, ubNorm) the per-doc-shard blended-WAND kernel
-    * ([[graft.search.Wand.blendedTopK]]) runs over decode-once lists
-    * with the shard's λ window served in-task from the [[LamStore]]
-    * side array — no candidate-band materialization, no λ join.
-    * Returns (set_id, doc_id, score) with ≤ k rows per (set, shard) and
-    * EXACT blended scores; the union over shards contains the global
-    * blended top-k of every set (each shard's k-th best blended score
-    * ≤ the global k-th best), so a downstream per-set top-k merge is
-    * exact — the wandTopKBatch argument, applied to the blend.
-    */
-  def blendedBatch(sets: Seq[(Int, Seq[String], Double, Double)], k: Int,
-      alpha: Double, lamHandle: LamHandle): DataFrame = {
-    val allTerms = sets.flatMap(_._2).distinct
-    val idf = idfFor(allTerms)
-    val p = bm25
-    val ad = avgdl
-    val lh = lensHandle
-    val posList = sets.zipWithIndex.map { case ((_, ts, _, _), pos) => (pos, ts) }
-    val bProg = spark.sparkContext.broadcast(
-      (sets.toArray, invertSets(posList), idf))
-    postingsFor(allTerms)
-      .groupByKey(_.shard)
-      .flatMapGroups { (shard, it) =>
-        val byTerm = decodeByTerm(it, p, ad, lh, shard)
-        val (setsArr, posOf, idfB) = bProg.value
-        val pool = new java.util.HashMap[String, Array[DecodedCursor]]()
-        byTerm.foreach { case (t, dls) =>
-          pool.put(t, dls.map(d => new DecodedCursor(d, idfB(t))))
-        }
-        val present = new java.util.BitSet(setsArr.length)
-        byTerm.keysIterator.foreach { t =>
-          posOf.get(t).foreach { a =>
-            var i = 0; while (i < a.length) { present.set(a(i)); i += 1 }
-          }
-        }
-        val lamArr = lamHandle.forShard(shard)
-        val base = shard.toLong * lh.docsPerShard
-        val lambdaOf: Long => Double = d => lamArr((d - base).toInt)
-        val ws = new Wand.Workspace
-        val cbuf = new scala.collection.mutable.ArrayBuffer[Wand.Cursor]()
-        Iterator.iterate(present.nextSetBit(0))(s => present.nextSetBit(s + 1))
-          .takeWhile(_ >= 0)
-          .flatMap { pos =>
-            val (sid, ts, lq, ubNorm) = setsArr(pos)
-            cbuf.clear()
-            var i = 0
-            while (i < ts.length) {
-              val cs = pool.get(ts(i))
-              if (cs != null) {
-                var j = 0
-                while (j < cs.length) { cs(j).reset(); cbuf += cs(j); j += 1 }
-              }
-              i += 1
-            }
-            Wand.blendedTopK(cbuf, k, alpha, ubNorm, lq, lambdaOf, ws)
-              .iterator.map(h => (sid, h.docId, h.score))
-          }
-      }
-      .toDF("set_id", "doc_id", "score")
-  }
-
-  /** Bound-safe candidate generation for blended re-ranking: per
-    * doc-shard block-max WAND with the pruning threshold deflated by
-    * `slack` (raw-BM25 units), returning each shard's
-    * { doc : bm25 ≥ shardKthBest − slack } with EXACT scores
-    * (Wand.candidatesWithSlack). The union over shards is a superset of
-    * the global { doc : bm25 ≥ globalKthBest − slack } because every
-    * shard's k-th best ≤ the global k-th best — so a downstream blend
-    * that re-ranks these candidates and takes k is exact.
-    *
-    * This is the hot-term scale path for LambdaIndex.blendedTopK: decode
-    * cost follows the pruned WAND frontier instead of every posting of
-    * every query term.
-    */
-  def wandCandidates(qTerms: Seq[String], k: Int, slack: Double): DataFrame = {
-    val terms = qTerms.distinct
-    val idf = idfFor(terms)
-    val p = bm25
-    val ad = avgdl
-    val lh = lensHandle
-    postingsFor(terms)
-      .groupByKey(_.shard)
-      .flatMapGroups { (shard, it) =>
-        val lens = lh.forShard(shard)
-        val base = shard.toLong * lh.docsPerShard
-        val cursors = it.toSeq.sortBy(_.term)
-          .map(pl => new PostingCursor(pl, p, ad, idf(pl.term), lens, base))
-        Wand.candidatesWithSlack(cursors, k, slack).iterator.map(h => (h.docId, h.score))
-      }
-      .toDF("doc_id", "bm25")
   }
 
   /** Exhaustive decode-and-score of every doc matching ≥1 query term:
@@ -1040,3 +903,10 @@ class InvertedIndex(@transient val spark: SparkSession, val dir: String) extends
       .select($"doc_id", $"bm25".as("score"))
       .orderBy($"score".desc, $"doc_id".asc).limit(k)
 }
+
+/** The blended scorer of an [[InvertedIndex.shardTopK]] program: α, each
+  * set's (λq, ubNorm) by set position, and the λ side arrays whose shard
+  * window the kernel reads in-task.
+  */
+final case class Blend(alpha: Double, lq: Array[Double], ubNorm: Array[Double],
+    lam: LamHandle)

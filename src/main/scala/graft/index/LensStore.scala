@@ -34,8 +34,8 @@ import org.apache.spark.util.SerializableConfiguration
   * executor only ever touches the windows of the shards it serves.
   *
   * [[LamStore]] below applies the same layout to per-doc λ (8-byte IEEE
-  * doubles): the blended batch path reads its shard's λ window in-task
-  * instead of shuffling a 10⁷-row candidate band through a λ join.
+  * doubles): every distributed blended query reads its shard's λ window
+  * in-task instead of shuffling a 10⁷-row candidate band through a λ join.
   */
 object LensStore {
 
@@ -176,6 +176,8 @@ object LensStore {
           }
           it.foreach { case (id, dl) =>
             require(dl >= 0 && dl <= Int.MaxValue, s"doc length $dl out of range for doc $id")
+            // a duplicate would open a second segment over the same id
+            require(id > prev, s"duplicate doc_id $id in the doclens table")
             if (id != prev + 1) {
               close()
               segStart = id; count = 0L
@@ -282,6 +284,9 @@ object LamStore {
               new java.io.BufferedOutputStream(fs.create(p, true), 1 << 16))
           }
           it.foreach { case (id, lam) =>
+            // a duplicate would write an extra record and shift every
+            // later λ of the segment onto the wrong doc
+            require(id > prev, s"duplicate doc_id $id in the λ table")
             if (out == null) open(id)
             else if (id - prev - 1 > MaxFillGap) {
               out.close(); open(id)

@@ -48,11 +48,11 @@ case class PostingList(
     encAvgdl: Double
 )
 
-/** Process-wide posting-decode counters — measurement hooks proving that
-  * pruning actually engages (block-max WAND / bounded blend candidates
-  * decode a strict subset of blocks vs exhaustive scoring), plus the
-  * payload-byte account behind the v5 dl-sidecar change. LongAdder:
-  * safe under local-mode executor threads; negligible write cost.
+/** Process-wide posting-decode counters: blocks and compressed payload
+  * bytes decoded by [[PostingFormat.decodeAll]] (every query path decodes
+  * through it, once per list it reads), plus the payload-byte account
+  * behind the v5 dl-sidecar change. LongAdder: safe under local-mode
+  * executor threads; negligible write cost.
   */
 object PostingStats {
   val blocksDecoded = new java.util.concurrent.atomic.LongAdder
@@ -173,7 +173,7 @@ object PostingFormat {
 }
 
 /** Fully-decoded posting list: decode ONCE, then share across many
-  * queries (batch execution / the in-memory serving tier). Positions map
+  * queries (the per-shard query program / the in-memory serving tier). Positions map
   * to blocks by `pos >> BlockShift` (all blocks are exactly BlockSize
   * except the last), so block-max metadata keeps working without
   * re-decoding.
@@ -213,14 +213,17 @@ object DecodedList {
   }
 }
 
-/** Zero-decode cursor over a shared DecodedList. O(1) construction AND
-  * O(1) [[reset]] — the batch path builds one cursor per (term, shard)
-  * list per task and resets it before every query instead of allocating
-  * ~sets × terms cursors per shard (measured GC pressure on the
-  * 32k-query batch).
+/** Zero-decode cursor over a shared DecodedList — the one cursor class
+  * the WAND kernels run on (`Wand.Cursor`), on every distributed path
+  * and in the serving replicas. O(1) construction AND O(1) [[reset]] —
+  * the shard program builds one cursor per (term, shard) list per task
+  * and resets it before every query instead of allocating ~sets × terms
+  * cursors per shard (measured GC pressure on the 32k-query batch).
   */
-final class DecodedCursor(dl: DecodedList, val idf: Double)
-    extends graft.search.Wand.Cursor {
+final class DecodedCursor(dl: DecodedList, val idf: Double) {
+  /** Creation-order index; WAND sums per-doc contributions in this order
+    * so scores are bit-deterministic regardless of cursor sort history.
+    */
   var ord: Int = 0
   private val n = dl.docIds.length
   private var pos = 0
@@ -235,7 +238,13 @@ final class DecodedCursor(dl: DecodedList, val idf: Double)
   def blockMaxScore: Double = idf * dl.blockMaxPartial(pos >> PostingFormat.BlockShift)
   def blockLastDocId: Long = dl.blockLastDoc(pos >> PostingFormat.BlockShift)
 
-  override def boundaryWithMaxBelow(limit: Double): Long = {
+  /** Cross-block shallow-advance boundary (BMW): last docId of the
+    * maximal run of consecutive blocks, starting at the current one,
+    * whose blockMaxScore stays < limit — scanned over block METADATA
+    * only. Callers must have already established that the current block
+    * is prunable.
+    */
+  def boundaryWithMaxBelow(limit: Double): Long = {
     var b = pos >> PostingFormat.BlockShift
     val nB = dl.blockLastDoc.length
     while (b + 1 < nB && idf * dl.blockMaxPartial(b + 1) < limit) b += 1
@@ -258,103 +267,4 @@ final class DecodedCursor(dl: DecodedList, val idf: Double)
     }
     pos = hi
   }
-}
-
-/** Forward-only cursor with block skipping; drives block-max WAND.
-  * `lens`/`base` give the shard's doc-length window (see DecodedList).
-  */
-final class PostingCursor(val pl: PostingList, params: BM25.Params, avgdl: Double,
-    val idf: Double, lens: Array[Int], base: Long) extends graft.search.Wand.Cursor {
-  /** Creation-order index; WAND sums per-doc contributions in this order
-    * so scores are bit-deterministic regardless of cursor sort history.
-    */
-  var ord: Int = 0
-  private val nBlocks = pl.blockLen.length
-  private var blockIdx = -1
-  private var docsInBlock: Array[Long] = _
-  private var tfsInBlock: Array[Long] = _
-  private var pos = 0
-  private var exhaustedFlag = false
-  loadBlock(0)
-
-  /** Lifts encoded bounds to the live avgdl (1.0 unless the corpus grew
-    * since this list was written — appended epochs).
-    */
-  private val bf: Double = PostingFormat.boundFactor(pl.encAvgdl, avgdl)
-
-  val maxScore: Double = idf * pl.maxPartial * bf
-
-  private def loadBlock(b: Int): Unit = {
-    if (b >= nBlocks) { exhaustedFlag = true; return }
-    PostingStats.blocksDecoded.increment()
-    val len = pl.blockLen(b)
-    val docOff = pl.blockDocOff(b)
-    val (deltas, docEnd) = Codec.forDecodeBlock(pl.docBytes, docOff, len)
-    var prev = if (b == 0) 0L else pl.blockLastDoc(b - 1)
-    val ids = new Array[Long](len)
-    var i = 0
-    while (i < len) { prev += deltas(i); ids(i) = prev; i += 1 }
-    docsInBlock = ids
-    val tfOff = pl.blockTfOff(b)
-    val (tfv, tfEnd) = Codec.decodeVarInts(pl.tfBytes, len, tfOff)
-    tfsInBlock = tfv
-    PostingStats.bytesDecoded.add((docEnd - docOff).toLong + (tfEnd - tfOff).toLong)
-    blockIdx = b
-    pos = 0
-  }
-
-  def exhausted: Boolean = exhaustedFlag
-  def docId: Long = docsInBlock(pos)
-
-  /** Current doc's full score contribution (idf × partial). */
-  def score: Double = {
-    val dl = lens((docsInBlock(pos) - base).toInt)
-    idf * PostingFormat.partial(tfsInBlock(pos).toDouble, dl.toDouble, params, avgdl)
-  }
-
-  /** Upper bound of any doc's contribution in the current block. */
-  def blockMaxScore: Double = idf * pl.blockMaxPartial(blockIdx) * bf
-
-  /** Last docId of the current block (shallow-advance boundary). */
-  def blockLastDocId: Long = pl.blockLastDoc(blockIdx)
-
-  /** Cross-block BMW boundary over block METADATA only — the run of
-    * consecutive blocks (from the current one) whose max score stays
-    * < limit is skipped without ever decoding those blocks.
-    */
-  override def boundaryWithMaxBelow(limit: Double): Long = {
-    var b = blockIdx
-    while (b + 1 < nBlocks && idf * pl.blockMaxPartial(b + 1) * bf < limit) b += 1
-    pl.blockLastDoc(b)
-  }
-
-  def next(): Unit = {
-    pos += 1
-    if (pos >= docsInBlock.length) loadBlock(blockIdx + 1)
-  }
-
-  /** Advance to the first posting with docId >= target (block skip). */
-  def advanceTo(target: Long): Unit = {
-    if (exhaustedFlag || docId >= target) return
-    if (pl.blockLastDoc(blockIdx) < target) {
-      // binary search the first block whose last >= target
-      var lo = blockIdx + 1
-      var hi = nBlocks - 1
-      if (lo >= nBlocks || pl.blockLastDoc(hi) < target) { exhaustedFlag = true; return }
-      while (lo < hi) {
-        val mid = (lo + hi) >>> 1
-        if (pl.blockLastDoc(mid) < target) lo = mid + 1 else hi = mid
-      }
-      loadBlock(lo)
-    }
-    while (docsInBlock(pos) < target) {
-      pos += 1
-      if (pos >= docsInBlock.length) { loadBlock(blockIdx + 1); if (exhaustedFlag) return }
-    }
-  }
-
-  /** Move past the current block without decoding it further (BMW shallow
-    * advance): position at first doc > boundary.
-    */
-  def shallowAdvancePast(boundary: Long): Unit = advanceTo(boundary + 1)
 }

@@ -290,9 +290,9 @@ object LambdaPipeline {
 
     // ---- λ side arrays (LamStore) --------------------------------------
     // fixed-width per-doc-shard λ windows, the v5 lens layout applied to
-    // λ: the blended batch path reads its shard's window in-task instead
-    // of shuffling the candidate band through a λ join (measured 64.6M
-    // band rows for the 4096-query α=0.9 bench batch)
+    // λ: every distributed blended query reads its shard's window in-task
+    // instead of shuffling a candidate band through a λ join (measured
+    // 64.6M band rows for the 4096-query α=0.9 bench batch)
     Stage.run(s"$dir/lamlens", "lamlens", fp) {
       graft.index.LamStore.writeSegments(spark,
         spark.read.parquet(s"$dir/lambdas"), s"$dir/lamlens", 32)
@@ -489,19 +489,14 @@ class LambdaIndex(spark: SparkSession, val dir: String) {
         spark.sparkContext.hadoopConfiguration)))
   }
 
-  /** Blended top-k: score = α·BM25̂ + (1−α)·(1−min(|λq−λd|,1)) where
-    * BM25̂ normalizes by the query's maximum possible BM25 mass
-    * (Σ_t idf·(k1+1)) so both components live in [0,1]. α=1 reproduces
-    * the pure BM25 ranking exactly (positive scaling preserves order) —
-    * the α=1 ≡ baseline regression the reference itself asserts
-    * (/root/reference/benches/index_compute_bench.rs:148-178).
-    *
-    * Candidates are docs matching ≥1 query term (inverted-index
-    * semantics; the reference's full scan over all items,
-    * core.rs:760-798, is recovered for matching docs — documented
-    * divergence for non-matching docs, which a text engine never
-    * surfaces).
-    */
+  /** The index's query tokenizer (meta `tokenizer`: "simple" or code). */
+  private def tokens(index: InvertedIndex, qText: String): Seq[String] = {
+    val fn: String => Array[String] =
+      if (index.meta.getOrElse("tokenizer", "code") == "simple") CodeTokenizer.simpleTokens
+      else CodeTokenizer.codeTokens
+    fn(qText).toSeq
+  }
+
   /** The engine-side blend inputs for a query text: (λq, ubNorm) — λq
     * from the query's own term multiset over the frozen vocab/CSR,
     * ubNorm = Σ_t idf·(k1+1) over the query's INDEXED terms. Exposed so
@@ -510,10 +505,7 @@ class LambdaIndex(spark: SparkSession, val dir: String) {
     * ranking in SQL over these + the exported λ table).
     */
   def blendInputs(index: InvertedIndex, qText: String): (Double, Double) = {
-    val tokMode = index.meta.getOrElse("tokenizer", "code")
-    val fn: String => Array[String] =
-      if (tokMode == "simple") CodeTokenizer.simpleTokens else CodeTokenizer.codeTokens
-    val qTerms = fn(qText).toSeq
+    val qTerms = tokens(index, qText)
     val qCounts = qTerms.groupBy(identity).map { case (t, xs) => t -> xs.size }
     val lq = queryLambda(qCounts)
     val info = index.termInfo(qTerms.distinct)
@@ -521,66 +513,44 @@ class LambdaIndex(spark: SparkSession, val dir: String) {
     (lq, ubNorm)
   }
 
+  /** Blended top-k: score = α·BM25̂ + (1−α)·(1−min(|λq−λd|,1)) where
+    * BM25̂ normalizes by the query's maximum possible BM25 mass
+    * (Σ_t idf·(k1+1)) so both components live in [0,1]. α=1 reproduces
+    * the pure BM25 ranking exactly (positive scaling preserves order) —
+    * the α=1 ≡ baseline regression the reference itself asserts
+    * (reference benches/index_compute_bench.rs:148-178).
+    *
+    * Candidates are docs matching ≥1 query term (inverted-index
+    * semantics; the reference's full scan over all items,
+    * core.rs:760-798, is recovered for matching docs — documented
+    * divergence for non-matching docs, which a text engine never
+    * surfaces).
+    *
+    * A one-set [[InvertedIndex.shardTopK]] program: each doc-shard task
+    * runs the blended-WAND kernel (`Wand.blendedTopK`) over its
+    * decode-once lists with the shard's λ window read from the
+    * [[graft.index.LamStore]] side arrays (a doc with no λ row reads
+    * 0.0), and the shard top-ks merge like `wandTopK`'s — no λ join,
+    * nothing collected but the final k rows. (λq, ubNorm) come from
+    * [[blendInputs]], the same scalars the gates export.
+    */
   def blendedTopK(index: InvertedIndex, qText: String, k: Int, alpha: Double,
       roundTo: Int = -1): DataFrame = {
-    val tokMode = index.meta.getOrElse("tokenizer", "code")
-    val fn: String => Array[String] =
-      if (tokMode == "simple") CodeTokenizer.simpleTokens else CodeTokenizer.codeTokens
-    val qTerms = fn(qText).toSeq
-    // λq and ubNorm come from the SHARED blendInputs path (also the
-    // gates' oracle-export source — one definition, no drift)
-    val (lq, ubNorm0) = blendInputs(index, qText)
-    val terms = qTerms.distinct
-    val info = index.termInfo(terms)
-    // Candidate generation is bound-safe block-max WAND, NOT exhaustive
-    // decode-and-score, and the band stays a DISTRIBUTED dataset — λ is
-    // joined on doc_id (per-shard band ≤ docsPerShard rows, so AQE
-    // broadcasts the band side; at cluster scale the λ table shares the
-    // doc-shard layout, making this a co-partitioned join). Nothing is
-    // ever collected to the driver.
-    //
-    // Slack math: score = α·bm25/ubNorm + (1−α)·prox with prox ∈ [0,1],
-    // so in raw-BM25 units the band needs slack = (1−α)/α·ubNorm below
-    // the REALIZED per-shard WAND θ (Wand.candidatesWithSlack prunes
-    // against its running heap threshold). The slack is CAPPED at
-    // tightUb = Σ_t idf·ub_t — the query's max achievable BM25 from
-    // per-term posting bounds (termstats.ub). θ ≤ tightUb always, so at
-    // the cap θ − slack ≤ 0 and the band is exactly every matching doc
-    // with its exact score: the mid-/low-α full-scan regime falls out of
-    // the same distributed path instead of a driver-side fallback (the
-    // reference's full scan, core.rs:760-798, restricted to matching
-    // docs — documented divergence).
-    val ubNorm = ubNorm0
-    val tightUb = info.values.map { case (i, u) => i * u }.sum
-    val slack =
-      if (alpha <= 0.0) tightUb
-      else math.min((1.0 - alpha) / alpha * ubNorm, tightUb)
-    val scored = index.wandCandidates(terms, k, slack)
-      .join(lambdas, Seq("doc_id"), "left")
-      .na.fill(0.0, Seq("lambda"))
-      .withColumn("score",
-        lit(alpha) * (col("bm25") / lit(ubNorm)) +
-          lit(1.0 - alpha) * (lit(1.0) - least(abs(lit(lq) - col("lambda")), lit(1.0))))
-      .select(col("doc_id"), col("score"))
-    val top = scored.orderBy(col("score").desc, col("doc_id").asc).limit(k)
-    if (roundTo >= 0) top.withColumn("score", round(col("score"), roundTo)) else top
+    val (lq, ubNorm) = blendInputs(index, qText)
+    val blend = graft.index.Blend(alpha, Array(lq), Array(ubNorm), lamHandle(index.docsPerShard))
+    index.mergeOne(
+      index.shardTopK(Seq(tokens(index, qText).distinct.sorted), k, Some(blend)), k, roundTo)
   }
 
-  /** Batched blended top-k: MANY blended queries in ONE Spark job,
-    * reusing wandTopKBatch's machinery (canonicalized + deduped term
-    * sets, decode-once per (term, shard) list) with the blend computed
-    * IN the shard task (InvertedIndex.blendedBatch: blended-WAND kernel
-    * + per-shard λ side array) and a per-query rank from the map-side
-    * TopKAgg heaps. The serving-tier shape: the reference's own
-    * headline bench is batch (/root/reference/benches/
-    * index_compute_bench.rs:180-320).
-    *
-    * The former shape materialized the slack band as a distributed
-    * dataset and λ-joined it — measured 64.6M band rows for the bench's
-    * 4096-query α=0.9 batch, whose rank shuffle dominated the path.
-    * Per-(set, shard) blended top-k ships ≤ sets × shards × k rows and
-    * every score is exact (Wand.blendedTopK doc), so results are
-    * IDENTICAL (rank-identity asserted in LambdaPipelineSpec).
+  /** Batched blended top-k: MANY blended queries in ONE Spark job — the
+    * [[InvertedIndex.shardTopK]] program over canonicalized + deduped
+    * (term set, λq) pairs with the blend computed IN the shard task, and
+    * a per-query rank from the map-side TopKAgg heaps
+    * (`InvertedIndex.rankPerQuery`). The serving-tier shape: the
+    * reference's own headline bench is batch (reference benches/
+    * index_compute_bench.rs:180-320). Per-(set, shard) blended top-k
+    * ships ≤ sets × shards × k rows and every score is exact
+    * (Wand.blendedTopK doc).
     *
     * Returns (qid, doc_id, score, rank) with rank ≤ k per qid, ordered
     * (score DESC, doc_id ASC) within each query. α=1 ranks ≡ pure BM25
@@ -588,12 +558,8 @@ class LambdaIndex(spark: SparkSession, val dir: String) {
     */
   def blendedTopKBatch(index: InvertedIndex, queries: Seq[(Int, String)],
       k: Int, alpha: Double): DataFrame = {
-    import spark.implicits._
-    val tokMode = index.meta.getOrElse("tokenizer", "code")
-    val fn: String => Array[String] =
-      if (tokMode == "simple") CodeTokenizer.simpleTokens else CodeTokenizer.codeTokens
     val prep = queries.map { case (qid, text) =>
-      val ts = fn(text).toSeq
+      val ts = tokens(index, text)
       val counts = ts.groupBy(identity).map { case (t, xs) => t -> xs.size }
       (qid, ts.distinct.sorted, queryLambda(counts))
     }
@@ -603,29 +569,13 @@ class LambdaIndex(spark: SparkSession, val dir: String) {
     // queries; the blended WAND runs once per canonical, the per-qid
     // fan-out joins only the k ranked rows at the very end
     val qNorm = prep.map { case (qid, ts, lqv) => (qid, ts.filter(info.contains), lqv) }
-    val canonOf: Map[(Seq[String], Double), Int] =
-      qNorm.map { case (_, ts, lqv) => (ts, lqv) }.distinct.zipWithIndex.toMap
-    def ubNormOf(ts: Seq[String]): Double = ts.map(info(_)._1 * k1p1).sum.max(1e-12)
-    val sets: Seq[(Int, Seq[String], Double, Double)] =
-      canonOf.toSeq.map { case ((ts, lqv), cid) => (cid, ts, lqv, ubNormOf(ts)) }
-        .sortBy(_._1)
-    val qMap = qNorm
-      .map { case (qid, ts, lqv) => (qid, canonOf((ts, lqv))) }
-      .toDF("qid", "set_id")
-    // per-canonical top-k via a MAP-SIDE-combining typed aggregator
-    // (graft.search.TopKAgg) over the per-shard blended top-ks
-    val agg = new graft.search.TopKAgg(k)
-    val ranked = index.blendedBatch(sets, k, alpha, lamHandle(index.docsPerShard))
-      .as[(Int, Long, Double)]
-      .groupByKey(_._1)
-      .mapValues(v => graft.search.ScoredDoc(v._2, v._3))
-      .agg(agg.toColumn)
-      .flatMap { case (cid, top) =>
-        top.iterator.zipWithIndex.map { case (h, i) => (cid, h.docId, h.score, i + 1) }
-      }
-      .toDF("set_id", "doc_id", "score", "rank")
-    ranked.join(broadcast(qMap), "set_id")
-      .select(col("qid"), col("doc_id"), col("score"), col("rank"))
+    val canon = qNorm.map { case (_, ts, lqv) => (ts, lqv) }.distinct
+    val canonOf = canon.zipWithIndex.toMap
+    val blend = graft.index.Blend(alpha, canon.map(_._2).toArray,
+      canon.map { case (ts, _) => ts.map(info(_)._1 * k1p1).sum.max(1e-12) }.toArray,
+      lamHandle(index.docsPerShard))
+    index.rankPerQuery(index.shardTopK(canon.map(_._1), k, Some(blend)),
+      qNorm.map { case (qid, ts, lqv) => (qid, canonOf((ts, lqv))) }, k)
   }
 
   /** Register the λτ aggregation as a SQL-callable UDAF (SURVEY.md §4

@@ -77,10 +77,9 @@ final class LocalBlended(
 
   /** One canonical (sorted indexed term set, λq) evaluated over this
     * replica's slice: per-shard blended-WAND kernel (pruned directly on
-    * the blended threshold — [[Wand.blendedTopK]]; formerly a
-    * slack-banded WAND whose whole band was blended), exact heap merge.
-    * Scores and tie-breaks are identical to the band path (the kernel
-    * computes the same expression for every surviving doc).
+    * the blended threshold — [[Wand.blendedTopK]], the kernel of the
+    * distributed blended paths too), exact heap merge. Scores and
+    * tie-breaks are identical to the distributed paths'.
     */
   private def topKCanonical(terms: Seq[String], lq: Double,
       info: Map[String, (Double, Double)], k: Int, alpha: Double): Array[Wand.Hit] = {

@@ -1,7 +1,5 @@
 package graft.search
 
-import graft.index.{PostingCursor, PostingList}
-
 /** Block-max WAND top-k over one shard's posting lists.
   *
   * Safe-pruning analog of the reference's two-stage candidate pruning
@@ -21,28 +19,11 @@ object Wand {
 
   final case class Hit(docId: Long, score: Double)
 
-  /** Cursor contract for block-max WAND (implemented by the
-    * decode-on-the-fly PostingCursor and the batch-mode DecodedCursor).
+  /** The one cursor class the kernels run on: a decode-once
+    * [[graft.index.DecodedCursor]], so every cursor call in the loops
+    * below is a static call on one final class.
     */
-  trait Cursor {
-    var ord: Int
-    def exhausted: Boolean
-    def docId: Long
-    def score: Double
-    def maxScore: Double
-    def blockMaxScore: Double
-    def blockLastDocId: Long
-    def next(): Unit
-    def advanceTo(target: Long): Unit
-    /** Cross-block shallow-advance boundary (BMW): last docId of the
-      * maximal run of consecutive blocks, starting at the current one,
-      * whose blockMaxScore stays < limit — scanned over block METADATA
-      * only, so the skipped blocks are never decoded. Callers must have
-      * already established that the current block is prunable. Default:
-      * no extension beyond the current block.
-      */
-    def boundaryWithMaxBelow(limit: Double): Long = blockLastDocId
-  }
+  type Cursor = graft.index.DecodedCursor
 
   /** Primitive top-k heap: parallel score/id arrays, worst-at-root
     * (worst = smaller score, larger docId on ties), no element
@@ -125,7 +106,6 @@ object Wand {
     private[search] var cursors = new Array[Cursor](16)
     private[search] var contrib = new Array[Double](16)
     private[search] var used = new Array[Boolean](16)
-    private[search] val band = new scala.collection.mutable.ArrayBuffer[Hit]()
     private[search] def ensure(n: Int): Unit = if (contrib.length < n) {
       val cap = java.lang.Integer.highestOneBit(math.max(n - 1, 8)) << 1
       cursors = new Array[Cursor](cap)
@@ -135,56 +115,20 @@ object Wand {
   }
 
   def topK(cursors0: scala.collection.Seq[Cursor], k: Int): Array[Hit] =
-    run(cursors0, k, 0.0, band = false, buf = null, ws = null)
+    run(cursors0, k, null)
 
   /** Batch-path variant with caller-owned scratch. */
   def topK(cursors0: scala.collection.Seq[Cursor], k: Int, ws: Workspace): Array[Hit] =
-    run(cursors0, k, 0.0, band = false, buf = null, ws = ws)
+    run(cursors0, k, ws)
 
   private def drain(heap: HitHeap): Array[Hit] = heap.drain()
 
-  /** Candidate generation for additively-blended re-ranking: returns
-    * EXACTLY the set { d : score(d) >= theta - slack } where theta is the
-    * k-th best raw score over these cursors, with each doc's exact raw
-    * score - pruned WAND-style with every threshold comparison deflated
-    * by `slack`.
-    *
-    * Why this is the right primitive for a blend f(d) = g(score(d)) +
-    * extra(d) with g monotone non-decreasing and 0 <= extra(d) <= E
-    * (lambda-proximity, freshness, any bounded secondary signal): the k
-    * best-by-raw-score docs each have f >= g(theta), while any doc with
-    * score < theta - slack (slack = E in raw-score units) has
-    * f <= g(score) + E < g(theta) - so the true blended top-k is always
-    * inside the returned set. Pruning safety: a doc skipped at time t
-    * had upperBound + slack < theta_t <= theta_final, hence score <
-    * theta_final - slack; contrapositive: every doc with score >=
-    * theta_final - slack is fully evaluated and returned.
-    *
-    * slack = 0 degenerates to exact-WAND band semantics (docs scoring >=
-    * the k-th best). Scores are summed in cursor creation order -
-    * bit-identical to [[topK]]'s.
-    */
-  def candidatesWithSlack(cursors0: scala.collection.Seq[Cursor], k: Int, slack: Double): Array[Hit] =
-    candidatesWithSlack(cursors0, k, slack, null)
-
-  /** Batch-path variant with caller-owned scratch (band buffer included). */
-  def candidatesWithSlack(cursors0: scala.collection.Seq[Cursor], k: Int, slack: Double,
-      ws: Workspace): Array[Hit] = {
-    require(slack >= 0.0 && !slack.isNaN, s"bad slack $slack")
-    val buf =
-      if (ws == null) new scala.collection.mutable.ArrayBuffer[Hit]()
-      else { ws.band.clear(); ws.band }
-    val top = run(cursors0, k, slack, band = true, buf = buf, ws = ws)
-    val th = if (top.length < k) Double.NegativeInfinity else top(k - 1).score
-    buf.filter(h => h.score >= th - slack).toArray
-  }
-
   /** Per-shard top-k by the BLENDED score
     * s(d) = α·(bm25(d)/ubNorm) + (1−α)·(1 − min(|λq − λ(d)|, 1)),
-    * pruned WAND-style directly on the blended threshold — the batch
-    * blended path's kernel. Exactness: every fully-evaluated doc gets
-    * its EXACT blended score (identical expression order to the
-    * former band-join SQL and to LocalBlended); a doc is only skipped
+    * pruned WAND-style directly on the blended threshold — the kernel of
+    * every blended path (distributed single and batch, serving replica).
+    * Exactness: every fully-evaluated doc gets its EXACT blended score,
+    * summed in cursor creation order like [[topK]]; a doc is only skipped
     * when its blended upper bound ub(d) = α·(Σ maxScores/ubNorm) +
     * (1−α)·1 is ≤ the current k-th best blended score θ — and since
     * docIds arrive ascending, an equal-scored later doc loses the
@@ -193,14 +137,9 @@ object Wand {
     * monotone under addition of ordered terms, so the computed bound
     * dominates every achievable computed score.
     *
-    * vs the band approach (candidatesWithSlack + λ join): the band's
-    * threshold deflation is the WORST-case prox gap (slack =
-    * (1−α)/α·ubNorm ⇔ assuming the k-th doc has prox 0); this kernel's
-    * effective deflation is the ACTUAL prox gap of the running k-th
-    * blended doc — when candidates sit near λq it prunes like pure
-    * WAND. Measured on the bench corpus: the α=0.9 4096-query band was
-    * 64.6M rows (38k docs per canonical set); this path evaluates and
-    * emits orders of magnitude less.
+    * The effective threshold deflation is the ACTUAL prox gap of the
+    * running k-th blended doc, not the worst case (prox 0): when
+    * candidates sit near λq the kernel prunes like pure WAND.
     */
   def blendedTopK(cursors0: scala.collection.Seq[Cursor], k: Int, alpha: Double,
       ubNorm: Double, lq: Double, lambdaOf: Long => Double,
@@ -304,9 +243,8 @@ object Wand {
               if (used(j)) { raw += contrib(j); used(j) = false }
               j += 1
             }
-            // EXACT blended score — identical operation order to the
-            // band path's SQL (lit(α)·(bm25/ubNorm) + lit(1−α)·(1 −
-            // least(|lq − λ|, 1))) and to LocalBlended.topKCanonical
+            // EXACT blended score — one operation order for every
+            // blended path and for the gates' DuckDB oracles
             val lam = lambdaOf(pivotDoc)
             val s = alpha * (raw / ubNorm) +
               oneMinusAlpha * (1.0 - math.min(math.abs(lq - lam), 1.0))
@@ -335,21 +273,17 @@ object Wand {
     def compare(a: Cursor, b: Cursor): Int = java.lang.Long.compare(a.docId, b.docId)
   }
 
-  /** The shared WAND driver. band = false: exact top-k (prune on
-    * ubSum <= theta - ties safe because docIds arrive ascending and lose
-    * the docId tie-break). band = true: strict-< pruning deflated by
-    * slack, every fully-evaluated doc appended to `buf` (an equal-bound
-    * doc ties the band edge theta - slack and belongs to the band by
-    * definition). Returns the heap's best-first top-k either way.
+  /** The BM25 WAND driver: exact top-k, pruning on ubSum <= theta (ties
+    * are safe because docIds arrive ascending and lose the docId
+    * tie-break). Returns the heap's best-first top-k.
     *
     * Hot-loop discipline (this runs per (query, shard) in the batch
     * path): cursor array compacted IN PLACE as lists exhaust, static
     * comparator sort over the active range, contribution scratch arrays
-    * allocated once per call - in top-k mode the loop allocates nothing
-    * (primitive heap; Hits materialize only at drain).
+    * allocated once per call - the loop allocates nothing (primitive
+    * heap; Hits materialize only at drain).
     */
-  private def run(cursors0: scala.collection.Seq[Cursor], k: Int, slack: Double, band: Boolean,
-      buf: scala.collection.mutable.ArrayBuffer[Hit], ws: Workspace): Array[Hit] = {
+  private def run(cursors0: scala.collection.Seq[Cursor], k: Int, ws: Workspace): Array[Hit] = {
     val heap = if (ws == null) new HitHeap else { ws.heap.clear(); ws.heap }
     val nOrd = cursors0.size
     if (ws != null) ws.ensure(nOrd)
@@ -367,11 +301,9 @@ object Wand {
 
     def theta: Double = if (heap.size < k) Double.NegativeInfinity else heap.headScore
 
-    @inline def prunable(ubSum: Double): Boolean =
-      if (band) ubSum + slack < theta else ubSum <= theta
+    @inline def prunable(ubSum: Double): Boolean = ubSum <= theta
 
     @inline def offer(s: Double, d: Long): Unit = {
-      if (band) buf += Hit(d, s)
       if (heap.size < k) heap.push(s, d)
       else if (s > heap.headScore || (s == heap.headScore && d < heap.headId))
         heap.replaceHead(s, d)
@@ -389,7 +321,7 @@ object Wand {
         if (heap.size < k || !prunable(acc)) found = p
         p += 1
       }
-      if (found < 0) done = true // nothing left can reach theta (- slack)
+      if (found < 0) done = true // nothing left can reach theta
       else {
         val pivotDoc = cursors(found).docId
         // extend the prefix over every cursor already at pivotDoc, so the
@@ -421,10 +353,10 @@ object Wand {
             }
             // single-cursor prefix (the hot single-term case): extend
             // across ALL consecutive blocks whose max stays under the
-            // (deflated) threshold - metadata-only scan, the skipped
+            // threshold - metadata-only scan, the skipped
             // blocks are never decoded
             if (found == 0 && !cursors(0).exhausted && cursors(0).docId == pivotDoc)
-              boundary = math.max(boundary, cursors(0).boundaryWithMaxBelow(theta - slack))
+              boundary = math.max(boundary, cursors(0).boundaryWithMaxBelow(theta))
             if (found + 1 < n)
               boundary = math.min(boundary, cursors(found + 1).docId - 1)
             if (boundary == Long.MaxValue || boundary < pivotDoc) boundary = pivotDoc
@@ -472,18 +404,5 @@ object Wand {
       }
     }
     drain(heap)
-  }
-
-  /** Convenience: build cursors then run. `idfByTerm` must contain every
-    * list's term; `lens`/`base` give the lists' shard doc-length window
-    * (all lists must share one shard — the per-shard task contract).
-    */
-  def topKLists(lists: Seq[PostingList], idfByTerm: Map[String, Double],
-      params: BM25.Params, avgdl: Double, k: Int,
-      lens: Array[Int], base: Long): Array[Hit] = {
-    val cursors = lists
-      .sortBy(_.term) // deterministic evaluation order
-      .map(pl => new PostingCursor(pl, params, avgdl, idfByTerm(pl.term), lens, base))
-    topK(cursors, k)
   }
 }

@@ -40,6 +40,13 @@ class LamStoreSpec extends AnyFunSuite {
     assert(h.forShard(20).forall(_ == 0.0))
   }
 
+  test("a duplicate doc_id fails the write instead of shifting later λ") {
+    val t = Files.createTempDirectory("graft-lam-dup").toString
+    val rows = (0L until 100L).map(d => d -> (d + 0.5)) :+ (40L -> 7.0)
+    val e = intercept[Exception](LamStore.writeSegments(spark, writeLam(s"$t/l", rows), s"$t/lamlens", 1))
+    assert(e.getMessage.contains("duplicate doc_id 40"), e.getMessage)
+  }
+
   test("multi-root windows merge (base + epoch) like the lens store") {
     val t = Files.createTempDirectory("graft-lam2").toString
     LamStore.writeSegments(spark, writeLam(s"$t/b", (0L until 100L).map(d => d -> (d + 0.5))),

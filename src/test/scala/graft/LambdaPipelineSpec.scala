@@ -76,15 +76,35 @@ class LambdaPipelineSpec extends AnyFunSuite {
   test("blendedTopK plan is fully distributed: no driver-collected band at any alpha") {
     // r2's candidate path collected the WAND band to the driver and
     // re-injected it as a LocalRelation/LocalTableScan — the scale
-    // killer. Every α regime must now keep the band a distributed
-    // dataset joined with the λ table.
+    // killer. The blended single is now the same one-set shard program
+    // as wandTopK: λ is read in-task from the side arrays, so its plan
+    // has no join, never scans the λ table, and shuffles exactly as
+    // often as wandTopK on the same terms.
+    val q = "get value data"
+    val terms = graft.tokenize.CodeTokenizer.codeTokens(q).distinct.toSeq
+    def exchanges(plan: String) = "Exchange".r.findAllIn(plan).size
+    val wandExchanges = exchanges(index.wandTopK(terms, 10).queryExecution.executedPlan.toString)
+    assert(wandExchanges > 0)
     for (alpha <- Seq(1.0, 0.7, 0.3, 0.0)) {
-      val top = li.blendedTopK(index, "get value data", 10, alpha)
+      val top = li.blendedTopK(index, q, 10, alpha)
       val optimized = top.queryExecution.optimizedPlan.toString
       val physical = top.queryExecution.executedPlan.toString
       assert(!optimized.contains("LocalRelation"), s"alpha=$alpha:\n$optimized")
       assert(!physical.contains("LocalTableScan"), s"alpha=$alpha:\n$physical")
+      assert(!physical.contains("Join"), s"alpha=$alpha:\n$physical")
+      assert(!physical.contains(s"${li.dir}/lambdas"), s"alpha=$alpha:\n$physical")
+      assert(exchanges(physical) == wandExchanges, s"alpha=$alpha:\n$physical")
     }
+  }
+
+  test("blendedTopK with warm term stats starts no more Spark jobs than wandTopK") {
+    val q = "get value data"
+    val terms = graft.tokenize.CodeTokenizer.codeTokens(q).distinct.toSeq
+    // warms the term-stat memo and the λ vocab/CSR
+    li.blendedTopK(index, q, 10, 0.9).collect()
+    val (_, wandJobs) = JobCounter.jobsIn(spark)(index.wandTopK(terms, 10).collect())
+    val (_, blendJobs) = JobCounter.jobsIn(spark)(li.blendedTopK(index, q, 10, 0.9).collect())
+    assert(blendJobs <= wandJobs, s"blendedTopK ran $blendJobs jobs, wandTopK $wandJobs")
   }
 
   test("blendedTopK ≡ brute-force blend over exhaustive scores (alpha 0.7 and 0.3)") {
@@ -106,34 +126,6 @@ class LambdaPipelineSpec extends AnyFunSuite {
       assert(got.map(_._1) == want.map(_._1), s"alpha=$alpha: $got vs $want")
       got.zip(want).foreach { case ((_, a), (_, b)) => assert(math.abs(a - b) < 1e-9) }
     }
-  }
-
-  test("blend pruning engages at high alpha; decode work never exceeds exhaustive") {
-    import graft.index.PostingStats
-    val q = "get value data index"
-    val terms = graft.tokenize.CodeTokenizer.codeTokens(q).distinct.toSeq
-    val total = index.scoreAllMatching(terms).count()
-    // the candidate BAND is the pruned quantity (at this corpus scale
-    // every list is a single block, so block-skip counters cannot move;
-    // band size is the resolution-independent witness)
-    def bandAt(alpha: Double): Long = {
-      val info = index.termInfo(terms)
-      val ubNorm = info.values.map(_._1 * (index.bm25.k1 + 1.0)).sum.max(1e-12)
-      val tightUb = info.values.map { case (i, u) => i * u }.sum
-      val slack = math.min((1.0 - alpha) / alpha * ubNorm, tightUb)
-      index.wandCandidates(terms, 10, slack).count()
-    }
-    val high = bandAt(0.95)
-    assert(high < total, s"no pruning at alpha=0.95: band $high of $total matching docs")
-    // α=0.7: slack caps at the query's max achievable BM25 → the band is
-    // every matching doc (the full-scan regime), still distributed
-    val mid = bandAt(0.7)
-    assert(mid <= total)
-    // decode work in the WAND band path never exceeds one exhaustive pass
-    def blocksOf(f: => Unit): Long = { PostingStats.reset(); f; PostingStats.decoded() }
-    val exhaustive = blocksOf(index.scoreAllMatching(terms).count())
-    val blended = blocksOf(li.blendedTopK(index, q, 10, alpha = 0.95).count())
-    assert(blended <= exhaustive, s"blended decoded more blocks: $blended vs $exhaustive")
   }
 
   test("blendedTopKBatch ≡ per-query blendedTopK at alpha 1.0 / 0.7 / 0.3") {
@@ -168,9 +160,9 @@ class LambdaPipelineSpec extends AnyFunSuite {
       a.zip(b).foreach { case ((_, x), (_, y)) => assert(math.abs(x - y) < 1e-9) }
     }
     // shard-scoped replicas (400 docs / 128 per shard → shards 0..3):
-    // merged half-range top-ks ≡ the full replica's — exact because per
-    // doc-shard bands are supersets of the global band restricted to
-    // that shard, and idf/ub/λq stats stay global
+    // merged half-range top-ks ≡ the full replica's — exact because each
+    // doc-shard's top-k holds the global top-k restricted to that shard,
+    // and idf/ub/λq stats stay global
     val lo = graft.search.LocalBlended.fromIndexes(index, li, 0, 1)
     val hi = graft.search.LocalBlended.fromIndexes(index, li, 2, Int.MaxValue)
     assert(!lo.lambdas.isEmpty && !hi.lambdas.isEmpty)
@@ -269,7 +261,7 @@ class LambdaPipelineSpec extends AnyFunSuite {
       LambdaPipeline.Config(vocabSize = 32, maxClusters = 8, seed = 42L))
     assert(lo.vocab.keySet.intersect(Set("zzshared", "zzonly60", "zzonly61")).isEmpty)
     // zero in-vocab terms → the docterms vocab join drops these docs →
-    // NO λ row (the blend's left-join na.fill(0.0) is their only λ)
+    // NO λ row (the side arrays' 0.0 fill is their only λ)
     val ids = lo.lambdas.select("doc_id").collect().map(_.getLong(0)).toSet
     assert(Seq(60L, 61L, 62L).forall(id => !ids.contains(id)), s"expected no λ rows, got $ids")
     // a query matching ONLY λ-less docs: prox is the constant

@@ -43,6 +43,13 @@ class LensStoreSpec extends AnyFunSuite {
     for (d <- 60 until 100) assert(lens(d) == d + 1)
   }
 
+  test("a duplicate doc_id fails the write instead of opening an overlapping segment") {
+    val t = Files.createTempDirectory("graft-lens-dup").toString
+    writeDoclens(s"$t/doclens", (0L until 100L).map(d => d -> (d + 1)) :+ (40L -> 9L))
+    val e = intercept[Exception](LensStore.writeSegments(spark, s"$t/doclens", s"$t/lens", parts = 1))
+    assert(e.getMessage.contains("duplicate doc_id 40"), e.getMessage)
+  }
+
   test("boundary shard merges base + epoch lens roots") {
     val t = Files.createTempDirectory("graft-lens-epoch").toString
     // base corpus: ids [0, 100); epoch: ids [100, 180). dps = 64 → shard 1

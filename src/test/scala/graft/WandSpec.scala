@@ -2,14 +2,14 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import graft.search.{ScoredDoc, TopKAgg}
-import graft.index.{PostingCursor, PostingFormat}
+import graft.index.{DecodedCursor, DecodedList, PostingFormat, PostingList}
 import graft.search.{BM25, Wand}
 import scala.util.Random
 
 /** Local (no Spark) tests: posting-list encode/decode round-trip, cursor
   * skipping, and block-max WAND == brute-force top-k on randomized
   * corpora (the WAND-never-changes-the-top-k assertion of SURVEY.md §7.2
-  * phase 5).
+  * phase 5), all on the decode-once [[DecodedCursor]] the kernels run on.
   */
 class WandSpec extends AnyFunSuite {
   val rnd = new Random(7)
@@ -54,6 +54,15 @@ class WandSpec extends AnyFunSuite {
     arr
   }
 
+  /** Decode-once cursors over `lists` in sorted-term order — the
+    * evaluation order of the per-shard query program — for one shard
+    * window at base 0.
+    */
+  def cursorsOf(lists: Seq[PostingList], idf: Map[String, Double], avgdl: Double,
+      lens: Array[Int]): Seq[DecodedCursor] =
+    lists.sortBy(_.term)
+      .map(pl => new DecodedCursor(DecodedList.from(pl, params, avgdl, lens, 0L), idf(pl.term)))
+
   def bruteTopK(docs: Map[Long, Map[String, Long]], dls: Map[Long, Long],
       idf: Map[String, Double], avgdl: Double, q: Seq[String], k: Int): Seq[(Long, Double)] = {
     docs.toSeq.flatMap { case (d, ts) =>
@@ -91,11 +100,14 @@ class WandSpec extends AnyFunSuite {
     val tfs = Array.fill(n)(1L)
     val dls = Array.fill(n)(10L)
     val pl = PostingFormat.encode("x", 0, ids, tfs, dls, params, 10.0)
-    val c = new PostingCursor(pl, params, 10.0, 1.0, lensOf(ids, dls), 0L)
+    val c = cursorsOf(Seq(pl), Map("x" -> 1.0), 10.0, lensOf(ids, dls)).head
     c.advanceTo(500)
-    assert(c.docId == 502) // first id >= 500: 502 = 3*167+1
+    assert(c.docId == 502) // first id >= 500: 502 = 3*167+1 (position 167, block 1)
+    assert(c.blockLastDocId == ids(255))
     c.advanceTo(2998)
-    assert(c.docId == 2998)
+    assert(c.docId == 2998) // position 999, the last (partial) block
+    assert(c.blockLastDocId == ids.last)
+    assert(c.blockMaxScore == pl.blockMaxPartial(7))
     c.advanceTo(ids.last + 10)
     assert(c.exhausted)
   }
@@ -103,7 +115,7 @@ class WandSpec extends AnyFunSuite {
   test("cursor sequential next() visits every posting") {
     val ids = (1L to 300L).toArray
     val pl = PostingFormat.encode("x", 0, ids, ids.map(_ => 1L), ids.map(_ => 10L), params, 10.0)
-    val c = new PostingCursor(pl, params, 10.0, 1.0, lensOf(ids, ids.map(_ => 10L)), 0L)
+    val c = cursorsOf(Seq(pl), Map("x" -> 1.0), 10.0, lensOf(ids, ids.map(_ => 10L))).head
     val seen = scala.collection.mutable.ArrayBuffer[Long]()
     while (!c.exhausted) { seen += c.docId; c.next() }
     assert(seen.toSeq == ids.toSeq)
@@ -126,8 +138,7 @@ class WandSpec extends AnyFunSuite {
         val q = lists.keys.toSeq.sorted.take(2)
         for (k <- Seq(3, 17)) {
           val want = bruteTopK(docs, dls, idf, avgdl, q, k)
-          val got = Wand.topKLists(q.flatMap(lists.get), idf, params, avgdl, k,
-              lensOf(dls), 0L)
+          val got = Wand.topK(cursorsOf(q.flatMap(lists.get), idf, avgdl, lensOf(dls)), k)
             .map(h => (h.docId, h.score)).toSeq
           assert(got.map(_._1) == want.map(_._1), s"trial=$trial k=$k: $got vs $want")
         }
@@ -149,37 +160,21 @@ class WandSpec extends AnyFunSuite {
       val q = rnd.shuffle(lists.keys.toList).take(qSize)
       for (k <- Seq(1, 3, 10)) {
         val want = bruteTopK(docs, dls, idf, avgdl, q, k)
-        val got = Wand.topKLists(q.flatMap(lists.get), idf, params, avgdl, k,
-            lensOf(dls), 0L)
+        val got = Wand.topK(cursorsOf(q.flatMap(lists.get), idf, avgdl, lensOf(dls)), k)
           .map(h => (h.docId, h.score)).toSeq
         assert(got.map(_._1) == want.map(_._1),
           s"trial=$trial k=$k q=$q: ${got.take(5)} vs ${want.take(5)}")
+        // bit-identical: the kernel and the brute force both sum the
+        // per-term contributions in sorted-term order
         got.zip(want).foreach { case ((_, gs), (_, ws)) =>
-          assert(math.abs(gs - ws) < 1e-9)
+          assert(java.lang.Double.doubleToRawLongBits(gs) ==
+            java.lang.Double.doubleToRawLongBits(ws), s"score drift $gs vs $ws")
         }
       }
     }
   }
 
-  test("DecodedCursor path identical to PostingCursor path (rank + score)") {
-    import graft.index.{DecodedCursor, DecodedList}
-    for (_ <- 1 to 15) {
-      val (docs, dls) = randomCorpus(300, 6, 0.15)
-      val avgdl = dls.values.sum.toDouble / dls.size
-      val lists = buildLists(docs, dls, avgdl)
-      val idf = lists.map { case (t, pl) => t -> BM25.idf(300.0, pl.df.toDouble) }
-      val q = lists.keys.toSeq.sorted.take(3)
-      val a = Wand.topKLists(q.flatMap(lists.get), idf, params, avgdl, 10,
-        lensOf(dls), 0L)
-      val decoded = q.flatMap(lists.get)
-        .map(pl => DecodedList.from(pl, params, avgdl, lensOf(dls), 0L))
-      val b = Wand.topK(decoded.sortBy(_.term).map(dl => new DecodedCursor(dl, idf(dl.term))), 10)
-      assert(a.map(h => (h.docId, h.score)).toSeq == b.map(h => (h.docId, h.score)).toSeq)
-    }
-  }
-
   test("DecodedCursor advanceTo gallop: exact positions") {
-    import graft.index.{DecodedCursor, DecodedList}
     val ids = (0 until 1000).map(i => i.toLong * 3 + 1).toArray
     val pl = PostingFormat.encode("x", 0, ids, ids.map(_ => 1L), ids.map(_ => 10L), params, 10.0)
     val c = new DecodedCursor(
@@ -188,104 +183,6 @@ class WandSpec extends AnyFunSuite {
     c.advanceTo(502); assert(c.docId == 502) // no-op at target
     c.advanceTo(2998); assert(c.docId == 2998)
     c.advanceTo(5000); assert(c.exhausted)
-  }
-
-  /** Full brute-force score table (term-sorted summation order — the
-    * same order candidatesWithSlack sums in).
-    */
-  def bruteScores(docs: Map[Long, Map[String, Long]], dls: Map[Long, Long],
-      idf: Map[String, Double], avgdl: Double, q: Seq[String]): Map[Long, Double] =
-    docs.flatMap { case (d, ts) =>
-      val contribs = q.sorted.flatMap(t => ts.get(t).map(tf =>
-        idf(t) * PostingFormat.partial(tf.toDouble, dls(d).toDouble, params, avgdl)))
-      if (contribs.isEmpty) None else Some(d -> contribs.sum)
-    }
-
-  def slackCandidates(lists: Map[String, graft.index.PostingList],
-      idf: Map[String, Double], avgdl: Double, q: Seq[String], k: Int,
-      slack: Double, lens: Array[Int]): Array[Wand.Hit] = {
-    val cursors = q.sorted.flatMap(lists.get)
-      .map(pl => new PostingCursor(pl, params, avgdl, idf(pl.term), lens, 0L))
-    Wand.candidatesWithSlack(cursors, k, slack)
-  }
-
-  test("candidatesWithSlack returns exactly the θ−slack band (30 random corpora)") {
-    for (trial <- 1 to 30) {
-      val nDocs = 50 + rnd.nextInt(900)
-      val (docs, dls) = randomCorpus(nDocs, 3 + rnd.nextInt(10), 0.05 + rnd.nextDouble() * 0.3)
-      val avgdl = dls.values.sum.toDouble / dls.size
-      val lists = buildLists(docs, dls, avgdl)
-      val idf = lists.map { case (t, pl) => t -> BM25.idf(nDocs.toDouble, pl.df.toDouble) }
-      val q = rnd.shuffle(lists.keys.toList).take(1 + rnd.nextInt(4))
-      val all = bruteScores(docs, dls, idf, avgdl, q)
-      if (all.nonEmpty) {
-        for (k <- Seq(1, 5, 20); slackScale <- Seq(0.0, 0.1, 0.7)) {
-          val sortedScores = all.values.toSeq.sorted(Ordering[Double].reverse)
-          val theta = if (all.size < k) Double.NegativeInfinity else sortedScores(k - 1)
-          val slack = slackScale * math.max(sortedScores.head, 1e-9)
-          val want = all.filter { case (_, s) => s >= theta - slack }
-          val got = slackCandidates(lists, idf, avgdl, q, k, slack, lensOf(dls))
-          assert(got.map(_.docId).toSet == want.keySet,
-            s"trial=$trial k=$k sl=$slackScale: got ${got.length} want ${want.size}")
-          got.foreach(h => assert(math.abs(h.score - want(h.docId)) < 1e-12))
-        }
-      }
-    }
-  }
-
-  test("blended top-k over slack candidates ≡ blended top-k over exhaustive scores") {
-    // the end-to-end property LambdaIndex.blendedTopK relies on: blend =
-    // α·bm25/ubNorm + (1−α)·prox with prox ∈ [0,1] arbitrary per doc
-    for (trial <- 1 to 30) {
-      val nDocs = 100 + rnd.nextInt(600)
-      val (docs, dls) = randomCorpus(nDocs, 4 + rnd.nextInt(8), 0.1 + rnd.nextDouble() * 0.3)
-      val avgdl = dls.values.sum.toDouble / dls.size
-      val lists = buildLists(docs, dls, avgdl)
-      val idf = lists.map { case (t, pl) => t -> BM25.idf(nDocs.toDouble, pl.df.toDouble) }
-      val q = rnd.shuffle(lists.keys.toList).take(1 + rnd.nextInt(3))
-      val all = bruteScores(docs, dls, idf, avgdl, q)
-      if (all.nonEmpty) {
-        val alpha = 0.2 + rnd.nextDouble() * 0.8
-        val k = 1 + rnd.nextInt(15)
-        val ubNorm = q.sorted.flatMap(idf.get).map(_ * (params.k1 + 1.0)).sum.max(1e-12)
-        val prox = all.keys.map(d => d -> rnd.nextDouble()).toMap // stands in for λ-proximity
-        def blend(d: Long, bm25: Double) = alpha * bm25 / ubNorm + (1 - alpha) * prox(d)
-        def topK(scored: Iterable[(Long, Double)]) =
-          scored.toSeq.map { case (d, s) => (d, blend(d, s)) }
-            .sortBy { case (d, s) => (-s, d) }.take(k).map(_._1)
-        val exhaustive = topK(all)
-        val slack = (1 - alpha) / alpha * ubNorm
-        val viaWand = topK(slackCandidates(lists, idf, avgdl, q, k, slack, lensOf(dls))
-          .map(h => (h.docId, h.score)))
-        assert(viaWand == exhaustive, s"trial=$trial α=$alpha k=$k")
-      }
-    }
-  }
-
-  test("slack candidates decode fewer blocks than exhaustive on a hot term") {
-    import graft.index.PostingStats
-    // hot term in EVERY doc; high-tf docs concentrated early → later
-    // blocks' max can't beat θ−slack and must be skipped without decode
-    val nDocs = 20000
-    val ids = (0L until nDocs.toLong).toArray
-    val tfs = ids.map(d => if (d < 100) 5L else 1L)
-    val dls = ids.map(_ => 10L)
-    val pl = PostingFormat.encode("hot", 0, ids, tfs, dls, params, 10.0)
-    val idf = Map("hot" -> BM25.idf(nDocs.toDouble, nDocs.toDouble))
-    val alpha = 0.9
-    val ubNorm = idf("hot") * (params.k1 + 1.0)
-    val slack = (1 - alpha) / alpha * ubNorm
-    PostingStats.reset()
-    PostingFormat.decodeAll(pl)
-    val exhaustiveBlocks = PostingStats.decoded()
-    assert(exhaustiveBlocks == pl.blockLen.length.toLong)
-    PostingStats.reset()
-    val cand = Wand.candidatesWithSlack(
-      Seq(new PostingCursor(pl, params, 10.0, idf("hot"), lensOf(ids, dls), 0L)), 10, slack)
-    val prunedBlocks = PostingStats.decoded()
-    assert(cand.nonEmpty)
-    assert(prunedBlocks < exhaustiveBlocks / 10,
-      s"pruning did not engage: $prunedBlocks vs $exhaustiveBlocks blocks")
   }
 
   test("TopKAgg ≡ sort.take(k) under arbitrary reduce/merge splits (100 random cases)") {
@@ -332,8 +229,8 @@ class WandSpec extends AnyFunSuite {
     }.sortBy { case (d, s) => (-s, d) }.take(k)
   }
 
-  test("blendedTopK kernel == brute-force blend (random corpora, alpha sweep, both cursor kinds)") {
-    import graft.index.{DecodedCursor, DecodedList}
+  test("blendedTopK kernel == brute-force blend (random corpora, alpha sweep)") {
+    val ws = new Wand.Workspace // reused across every call, like a shard task's
     for (trial <- 1 to 20) {
       val nDocs = 100 + rnd.nextInt(600)
       val (docs, dls) = randomCorpus(nDocs, 3 + rnd.nextInt(8), 0.05 + rnd.nextDouble() * 0.3)
@@ -351,24 +248,19 @@ class WandSpec extends AnyFunSuite {
         val lambdaOf: Long => Double = d => lam.getOrElse(d, 0.0)
         for (alpha <- Seq(1.0, 0.9, 0.5, 0.0); k <- Seq(1, 5, 10)) {
           val want = bruteBlend(docs, dls, idf, avgdl, q, k, alpha, ubNorm, lq, lam)
-          val pcs = q.flatMap(lists.get).sortBy(_.term)
-            .map(pl => new PostingCursor(pl, params, avgdl, idf(pl.term), lensOf(dls), 0L))
-          val got = Wand.blendedTopK(pcs, k, alpha, ubNorm, lq, lambdaOf, null)
-            .map(h => (h.docId, h.score)).toSeq
+          val got = Wand.blendedTopK(cursorsOf(q.flatMap(lists.get), idf, avgdl, lensOf(dls)),
+            k, alpha, ubNorm, lq, lambdaOf, null).map(h => (h.docId, h.score)).toSeq
           assert(got.map(_._1) == want.map(_._1),
             s"trial=$trial alpha=$alpha k=$k q=$q: $got vs $want")
-          // scores must be BIT-identical (same expression order as the
-          // band-join SQL the kernel replaced)
-          got.zip(want).foreach { case ((_, gs), (_, ws)) =>
+          // scores must be BIT-identical (the brute force uses the
+          // kernel's expression order)
+          got.zip(want).foreach { case ((_, gs), (_, w)) =>
             assert(java.lang.Double.doubleToRawLongBits(gs) ==
-              java.lang.Double.doubleToRawLongBits(ws), s"score drift $gs vs $ws")
+              java.lang.Double.doubleToRawLongBits(w), s"score drift $gs vs $w")
           }
-          val dcs = q.flatMap(lists.get).sortBy(_.term)
-            .map(pl => new DecodedCursor(
-              DecodedList.from(pl, params, avgdl, lensOf(dls), 0L), idf(pl.term)))
-          val got2 = Wand.blendedTopK(dcs, k, alpha, ubNorm, lq, lambdaOf,
-            new Wand.Workspace).map(h => (h.docId, h.score)).toSeq
-          assert(got2 == got, s"decoded-cursor drift trial=$trial alpha=$alpha k=$k")
+          val got2 = Wand.blendedTopK(cursorsOf(q.flatMap(lists.get), idf, avgdl, lensOf(dls)),
+            k, alpha, ubNorm, lq, lambdaOf, ws).map(h => (h.docId, h.score)).toSeq
+          assert(got2 == got, s"workspace drift trial=$trial alpha=$alpha k=$k")
         }
       }
     }
@@ -393,9 +285,8 @@ class WandSpec extends AnyFunSuite {
         val ubNorm = math.max(q.map(idf(_) * (params.k1 + 1.0)).sum, 1e-12)
         for (alpha <- Seq(0.9, 0.5); k <- Seq(3, 17)) {
           val want = bruteBlend(docs, dls, idf, avgdl, q, k, alpha, ubNorm, lq, lam)
-          val pcs = q.flatMap(lists.get).sortBy(_.term)
-            .map(pl => new PostingCursor(pl, params, avgdl, idf(pl.term), lensOf(dls), 0L))
-          val got = Wand.blendedTopK(pcs, k, alpha, ubNorm, lq,
+          val got = Wand.blendedTopK(cursorsOf(q.flatMap(lists.get), idf, avgdl, lensOf(dls)),
+            k, alpha, ubNorm, lq,
             (d: Long) => lam.getOrElse(d, 0.0), null)
             .map(h => (h.docId, h.score)).toSeq
           assert(got == want, s"trial=$trial alpha=$alpha k=$k")
@@ -409,10 +300,30 @@ class WandSpec extends AnyFunSuite {
     val avgdl = dls.values.sum.toDouble / dls.size
     val lists = buildLists(docs, dls, avgdl)
     val idf = lists.map { case (t, pl) => t -> BM25.idf(20.0, pl.df.toDouble) }
-    val got = Wand.topKLists(List("t0").flatMap(lists.get), idf, params, avgdl, 1000,
-      lensOf(dls), 0L)
+    val got = Wand.topK(cursorsOf(List("t0").flatMap(lists.get), idf, avgdl, lensOf(dls)), 1000)
     val matching = docs.count(_._2.contains("t0"))
     assert(got.length == matching)
-    assert(Wand.topKLists(Nil, idf, params, avgdl, 5, Array.empty[Int], 0L).isEmpty)
+    assert(Wand.topK(cursorsOf(Nil, idf, avgdl, Array.empty[Int]), 5).isEmpty)
+  }
+
+  test("blended WAND hot-term pruning at alpha 0.9: < 1/10 of docs scored, ≡ brute force") {
+    // hot term in EVERY doc; high-tf docs concentrated early → once the
+    // heap holds them, later blocks' blended bound cannot beat θ and the
+    // kernel skips them. lambdaOf is called once per fully scored doc.
+    val nDocs = 20000
+    val docs = (0L until nDocs.toLong).map(d => d -> Map("hot" -> (if (d < 100) 5L else 1L))).toMap
+    val dls = docs.map { case (d, _) => d -> 10L }
+    val lists = buildLists(docs, dls, 10.0)
+    val idf = Map("hot" -> BM25.idf(nDocs.toDouble, nDocs.toDouble))
+    val lam = docs.keys.map(d => d -> (d % 17) / 100.0).toMap
+    val (alpha, lq, k) = (0.9, 0.05, 10)
+    val ubNorm = idf("hot") * (params.k1 + 1.0)
+    var scored = 0
+    val lambdaOf: Long => Double = { d => scored += 1; lam(d) }
+    val got = Wand.blendedTopK(cursorsOf(lists.values.toSeq, idf, 10.0, lensOf(dls)),
+      k, alpha, ubNorm, lq, lambdaOf, null).map(h => (h.docId, h.score)).toSeq
+    assert(got == bruteBlend(docs, dls, idf, 10.0, Seq("hot"), k, alpha, ubNorm, lq, lam))
+    assert(scored > 0 && scored < nDocs / 10,
+      s"pruning did not engage: $scored of $nDocs matching docs scored")
   }
 }
